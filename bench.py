@@ -10,7 +10,6 @@ shuffle + compute, not just plan construction.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
@@ -99,6 +98,7 @@ def run_suite(
     verdict item 2: a red bench row was unattributable from the JSON —
     error text went only to stderr, which the driver does not keep)."""
     from fp_data_lakehouse_spark.operators import REGISTRY
+    from fp_data_lakehouse_spark.operators.registry import _release_session_state
 
     timings: dict[str, float] = {}
     if errors is None:
@@ -136,45 +136,9 @@ def run_suite(
                 print(f"# bench error in {name}: {exc}", file=sys.stderr)
                 break
         timings[name] = round(best, 3)
-        # Release this query's (lazy) localCheckpoint blocks before the
-        # next one runs — but only when the block manager actually holds
-        # persistent RDDs (r13 verdict item 2: the unconditional
-        # gc.collect + System.gc here taxed the suite wall ~0.4-0.5 s
-        # per query for the ~220 queries that pin nothing), or when the
-        # JVM heap is genuinely pressured. r15 (r14 verdict item 1): the
-        # pressure trigger is now min(50% of max, JANITOR_HEAP_TRIGGER
-        # absolute bytes) — the r14 fraction-only trigger never fired on
-        # this 48g heap, so deferred garbage was collected INSIDE the
-        # timed regions of driver-loop-heavy queries (tx19 ×2.6).
-        try:
-            # py4j auto-converts the Map: iterate the view (.toArray()
-            # raised AttributeError and silently no-op'd until r13)
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            pinned = list(jmap.values())
-        except Exception:
-            pinned = []
-        pressured = False
-        if not pinned:
-            try:
-                from fp_data_lakehouse_spark.operators.registry import (
-                    JANITOR_HEAP_TRIGGER_BYTES,
-                )
-
-                rt = spark.sparkContext._jvm.Runtime.getRuntime()
-                trigger = min(
-                    0.5 * rt.maxMemory(), float(JANITOR_HEAP_TRIGGER_BYTES)
-                )
-                pressured = (rt.totalMemory() - rt.freeMemory()) > trigger
-            except Exception:
-                pressured = False
-        if pinned or pressured:
-            gc.collect()
-            for jrdd in pinned:
-                try:
-                    jrdd.unpersist(False)
-                except Exception:
-                    pass
-            spark.sparkContext._jvm.System.gc()
+        # release this query's localCheckpoint blocks (and GC when the
+        # heap is pressured) before the next one — the queries() janitor
+        _release_session_state(spark)
     return timings
 
 
@@ -331,6 +295,7 @@ def sweep_docs() -> None:
     import math
 
     from fp_data_lakehouse_spark.operators import REGISTRY
+    from fp_data_lakehouse_spark.operators.registry import _release_session_state
     from fp_data_lakehouse_spark.session import get_session
 
     import threading
@@ -394,13 +359,7 @@ def sweep_docs() -> None:
                         timer.cancel()
             timings[name] = round(best, 3)
             print(f"# done {name}@{label}: {timings[name]}", file=sys.stderr)
-            gc.collect()
-            try:
-                jmap = spark.sparkContext._jsc.getPersistentRDDs()
-                for jrdd in jmap.values().toArray():
-                    jrdd.unpersist(False)
-            except Exception:
-                pass
+            _release_session_state(spark)
         fams = family_totals(timings)
         per_sf[label] = fams
         capped[label] = sorted(n for n, t in timings.items() if t == -2.0)

@@ -653,7 +653,7 @@ _EV18_MIN_ERRORS = 2  # an hour is "errorful" with >= this many error events
     "ev18_session_error_hour_overlap",
     oracle=f"""
     WITH ev AS (
-        SELECT user_id, CAST(epoch(ts) AS BIGINT) AS ep, event_type FROM events
+        SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ep, event_type FROM events
     ),
     marks AS (
         SELECT user_id, ep,
@@ -763,7 +763,7 @@ _EV19_TOP = 15
     "ev19_session_path_trigrams",
     oracle=f"""
     WITH ev AS (
-        SELECT user_id, CAST(epoch(ts) AS BIGINT) AS ep, event_id, event_type
+        SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ep, event_id, event_type
         FROM events
     ),
     marks AS (
@@ -857,11 +857,11 @@ def ev19_session_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ev20_user_feature_assembly",
     oracle="""
     WITH bounds AS (
-        SELECT CAST(epoch(MAX(ts)) AS BIGINT) AS max_ep FROM events
+        SELECT CAST(floor(epoch(MAX(ts))) AS BIGINT) AS max_ep FROM events
     ),
     ev AS (
         SELECT user_id, event_type,
-               CAST(epoch(ts) AS BIGINT) AS ep,
+               CAST(floor(epoch(ts)) AS BIGINT) AS ep,
                CAST(ROUND(value * 100) AS BIGINT) AS cents
         FROM events
     )

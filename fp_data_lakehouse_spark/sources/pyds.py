@@ -38,15 +38,24 @@ Two sources, registered via :func:`register_python_sources`:
   so the stream keeps tailing as new versions commit (the Delta
   "table-as-a-stream" pattern, reduced to its essentials).
 
+``fp_versioned`` also writes: ``df.write`` (one new version per save)
+and ``writeStream`` (one new version per micro-batch, exactly once per
+(txnAppId, batchId) via the ``_COMMITS`` ledger). Both stage parquet
+from the executors and commit through ``versioned._commit_files`` —
+the same claim, ledger and pointer protocol ``versioned.write_version``
+uses; this module holds no commit protocol of its own.
+
 Why a Python DataSource and not another helper function: the
 ``DataSource`` API is the supported Spark-4 seam for sources the JVM
 has no connector for — registering once makes the versioned layer
 consumable from SQL (``CREATE TEMPORARY VIEW ... USING``), from any
 language binding, and from readStream, with Catalyst seeing an
-ordinary relation it can prune/filter above. Filesystem access rides
-``pyarrow.fs`` (local paths and any ``scheme://`` pyarrow can reach),
-mirroring the LocalFs/HadoopFs backend seam in
-``sources/versioned.py``.
+ordinary relation it can prune/filter above. Data files ride
+``pyarrow.fs`` (local paths and any ``scheme://`` pyarrow can reach).
+Version listing, the pointer and commits go through the
+``sources/versioned.py`` backend seam with a pure-Python backend
+(``_backend``): these run in Python workers with no SparkSession, so
+the Hadoop backend is out of reach.
 
 Reference parity: the reference's sources are fixed-format directory
 scans (SURVEY.md §2.1 S1); this module is the extension seam those
@@ -94,12 +103,19 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .versioned import (
+    LocalFsBackend,
+    _commit_files,
+    _finish_replayed_commit,
+    _heartbeat_staging,
+    _lease_staging,
+    _ledger_entries,
+    latest_version,
+    versions,
+)
+
 if TYPE_CHECKING:  # pragma: no cover
     import pyarrow.fs as pafs
-
-_PTR = "_LATEST"
-_VDIR = re.compile(r"^v(\d{5})$")
-_MANIFEST = re.compile(r"^_manifest_v(\d{5})\.json$")
 
 
 # ---------------------------------------------------------------------------
@@ -116,45 +132,102 @@ def _fs_and_path(path: str) -> tuple["pafs.FileSystem", str]:
     return pafs.LocalFileSystem(), path
 
 
-def _list_versions(fs: "pafs.FileSystem", table_dir: str) -> list[int]:
-    """Retained versions: copy-published v-dirs AND manifest-published
-    versions (versioned.write_version(manifest=True)), so the Python
-    DataSource reads the same snapshot set the JVM reader resolves."""
-    import pyarrow.fs as pafs
-
-    try:
-        infos = fs.get_file_info(pafs.FileSelector(table_dir, recursive=False))
-    except FileNotFoundError:
-        return []
-    out = set()
-    for info in infos:
-        m = _VDIR.match(info.base_name)
-        if m and info.type == pafs.FileType.Directory:
-            out.add(int(m.group(1)))
-        mm = _MANIFEST.match(info.base_name)
-        if mm and info.type == pafs.FileType.File:
-            out.add(int(mm.group(1)))
-    return sorted(out)
+def _backend(path: str):
+    """The ``versioned`` backend for a table path. Reads and commits run
+    in Python worker processes that have no SparkSession, so
+    ``versioned._backend_for``'s Hadoop backend is out of reach: bare
+    paths take ``LocalFsBackend``, ``scheme://`` paths the pyarrow.fs
+    adapter below."""
+    return _ArrowFsBackend(path) if "://" in path else LocalFsBackend()
 
 
-def _read_pointer(fs: "pafs.FileSystem", table_dir: str) -> int | None:
-    try:
-        with fs.open_input_stream(f"{table_dir}/{_PTR}") as f:
-            return int(f.read().decode().strip())
-    except (FileNotFoundError, OSError, ValueError):
-        return None
+class _ArrowFsBackend:
+    """The ``versioned`` backend methods the Python DataSource reads and
+    commits call, over the ``pyarrow.fs`` filesystem of a ``scheme://``
+    table path. Paths arrive as full URIs and are mapped to the
+    filesystem's own paths by stripping the prefix ``from_uri`` drops."""
+
+    def __init__(self, uri: str):
+        self._fs, _ = _fs_and_path(uri)
+        self._prefix = _uri_prefix(uri)
+
+    def _p(self, p: str) -> str:
+        return p[len(self._prefix):] if p.startswith(self._prefix) else p
+
+    def list_names(self, d: str) -> list[str]:
+        import pyarrow.fs as pafs
+
+        sel = pafs.FileSelector(self._p(d), allow_not_found=True)
+        return [i.base_name for i in self._fs.get_file_info(sel)]
+
+    def makedirs(self, d: str) -> None:
+        self._fs.create_dir(self._p(d), recursive=True)
+
+    def read_text(self, p: str) -> str | None:
+        try:
+            with self._fs.open_input_stream(self._p(p)) as f:
+                return f.read().decode()
+        except FileNotFoundError:
+            return None
+
+    def write_text_atomic(self, p: str, content: str) -> None:
+        import uuid
+
+        fp = self._p(p)
+        tmp = f"{fp.rsplit('/', 1)[0]}/._latest_{uuid.uuid4().hex[:8]}.tmp"
+        with self._fs.open_output_stream(tmp) as out:
+            out.write(content.encode())
+        self._fs.move(tmp, fp)
+
+    def rmtree(self, p: str) -> None:
+        try:
+            self._fs.delete_dir(self._p(p))
+        except FileNotFoundError:
+            pass
+
+    def create_exclusive(self, p: str, content: str = "") -> bool:
+        import warnings
+
+        import pyarrow.fs as pafs
+
+        warnings.warn(
+            f"claim protocol on {type(self._fs).__name__} degrades to "
+            "check-then-create (pyarrow exposes no exclusive create); "
+            "concurrent writers on this filesystem need a log-based table "
+            "format or an object store with conditional PUT",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        fp = self._p(p)
+        if self._fs.get_file_info(fp).type != pafs.FileType.NotFound:
+            return False
+        with self._fs.open_output_stream(fp) as out:
+            out.write(content.encode())
+        return True
+
+    def delete_file(self, p: str) -> None:
+        try:
+            self._fs.delete_file(self._p(p))
+        except FileNotFoundError:
+            pass
+
+    def move(self, src: str, dst: str) -> None:
+        self._fs.move(self._p(src), self._p(dst))
 
 
-def _resolve_version(table_dir: str, version: int | None) -> tuple[int, str]:
-    """(version, snapshot_dir) for an explicit version or the pointer."""
-    fs, p = _fs_and_path(table_dir)
-    v = version if version is not None else _read_pointer(fs, p)
+def _resolve_version(table_dir: str, version: int | None) -> int:
+    """An explicit version, else the pointer, else the newest retained
+    version."""
+    if version is not None:
+        return version
+    backend = _backend(table_dir)
+    v = latest_version(table_dir, backend)
     if v is None:
-        vs = _list_versions(fs, p)
+        vs = versions(table_dir, backend)
         if not vs:
             raise FileNotFoundError(f"no versions under {table_dir}")
         v = vs[-1]
-    return v, f"{p}/v{v:05d}"
+    return v
 
 
 def _uri_prefix(original_path: str) -> str:
@@ -443,14 +516,12 @@ def _ddl_to_arrow(ddl: str):
 
 
 def _snapshot_schema(table_dir: str, version: int | None) -> StructType:
-    import pyarrow.parquet as pq
-
     fs, p = _fs_and_path(table_dir)
-    v, _snap = _resolve_version(table_dir, version)
+    v = _resolve_version(table_dir, version)
     files = _version_files(fs, p, v)
     if not files:
         raise FileNotFoundError(f"empty snapshot v{v} in {table_dir}")
-    physical = _arrow_schema_to_spark(pq.read_schema(files[0], filesystem=fs))
+    physical = _arrow_schema_to_spark(_parquet_dataset(fs, files[0]).schema)
     mapping = _manifest_columns(fs, p, v)
     if not mapping:
         return physical
@@ -468,201 +539,6 @@ def _snapshot_schema(table_dir: str, version: int | None) -> StructType:
                 StructField(c["name"], _ddl_to_spark_type(c["type"]), True)
             )
     return StructType(fields)
-
-
-
-
-_LEDGER_FILE = "_COMMITS"
-
-
-def _write_pointer_file(fs: "pafs.FileSystem", p: str, v: int) -> None:
-    tmp = f"{p}/._latest_{v:05d}.tmp"
-    with fs.open_output_stream(tmp) as out:
-        out.write(str(v).encode())
-    fs.move(tmp, f"{p}/{_PTR}")
-
-
-def _ledger_entries(fs: "pafs.FileSystem", p: str) -> dict[tuple[str, int], int]:
-    """Parse the streaming-commit ledger: (appId, batchId) -> version.
-    Legacy 2-field lines (batchId:version) read back under appId
-    'default'."""
-    try:
-        with fs.open_input_stream(f"{p}/{_LEDGER_FILE}") as f:
-            lines = f.read().decode().strip().splitlines()
-    except (FileNotFoundError, OSError):
-        return {}
-    out: dict[tuple[str, int], int] = {}
-    for ln in lines:
-        if not ln:
-            continue
-        parts = ln.split(":")
-        if len(parts) == 2:
-            out[("default", int(parts[0]))] = int(parts[1])
-        else:
-            out[(":".join(parts[:-2]), int(parts[-2]))] = int(parts[-1])
-    return out
-
-
-def _dir_exists(fs: "pafs.FileSystem", d: str) -> bool:
-    import pyarrow.fs as pafs
-
-    return fs.get_file_info(d).type == pafs.FileType.Directory
-
-
-def _lease_bytes() -> bytes:
-    """Claim/staging lease: writer id + heartbeat epoch seconds — the
-    same format versioned.py writes, so versioned.fsck's TTL check
-    reads leases from EITHER writer family (mixed writers share the
-    marker files)."""
-    import time
-    import uuid
-
-    return f"{uuid.uuid4().hex[:12]} {time.time():.3f}".encode()
-
-
-def _write_lease_file(fs: "pafs.FileSystem", path: str) -> None:
-    """Atomically (tmp + rename) refresh a staging ``_lease`` marker so
-    a concurrent versioned.fsck sees the staging dir as live and does
-    not sweep it. Best-effort: a missed refresh degrades to the TTL
-    race fsck already tolerates."""
-    import uuid
-
-    tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
-    try:
-        with fs.open_output_stream(tmp) as out:
-            out.write(_lease_bytes())
-        fs.move(tmp, path)
-    except OSError:
-        pass
-
-
-def _try_claim(fs: "pafs.FileSystem", p: str, v: int) -> bool:
-    """Atomically create the claim marker for version ``v``, carrying a
-    lease (writer id + timestamp) so versioned.fsck can tell a live
-    claim from a crash leftover. On the local filesystem this is a
-    true O_EXCL create; on URI filesystems pyarrow exposes no exclusive
-    create, so this degrades to check-then-create — the same
-    object-store caveat as the pointer rename (a log-based table
-    format is the upgrade path there, see versioned.py module
-    docstring)."""
-    import pyarrow.fs as pafs
-
-    claim = f"{p}/_claim_v{v:05d}"
-    if isinstance(fs, pafs.LocalFileSystem):
-        import os
-        import tempfile
-
-        # content-atomic exclusive create (same move as
-        # versioned.LocalFsBackend.create_exclusive): write the lease
-        # to a private temp file and link(2) it into place, so a
-        # concurrent fsck can never observe a lease-less marker and
-        # reclaim a live writer's just-created claim
-        fd, tmp = tempfile.mkstemp(dir=p, prefix="._claim_")
-        try:
-            with os.fdopen(fd, "wb") as f:
-                f.write(_lease_bytes())
-            try:
-                os.link(tmp, claim)
-            except FileExistsError:
-                return False
-            return True
-        finally:
-            os.unlink(tmp)
-    import warnings
-
-    warnings.warn(
-        f"claim protocol on {type(fs).__name__} degrades to "
-        "check-then-create (pyarrow exposes no exclusive create); "
-        "concurrent writers on this filesystem need a log-based table "
-        "format or an object store with conditional PUT",
-        RuntimeWarning,
-        stacklevel=2,
-    )
-    if fs.get_file_info(claim).type != pafs.FileType.NotFound:
-        return False
-    with fs.open_output_stream(claim) as out:
-        out.write(_lease_bytes())
-    return True
-
-
-def _release_claim(fs: "pafs.FileSystem", p: str, v: int) -> None:
-    try:
-        fs.delete_file(f"{p}/_claim_v{v:05d}")
-    except (FileNotFoundError, OSError):
-        pass
-
-
-def _claim_commit_slot(fs: "pafs.FileSystem", p: str, max_wait_sec: float = 30.0) -> int:
-    """Optimistic-concurrency version allocation: returns the claimed
-    version number ``committed + 1`` with its claim marker held. The
-    claim is the serialization point — only one writer can own a given
-    number, and the pointer can only advance to ``v`` through the
-    writer holding claim ``v``, so two concurrent committers can never
-    both publish the same slot (the round-5 last-wins pointer race).
-
-    Also repairs on the way in:
-    - a ledger'd version above the pointer (stream-writer crash between
-      ledger write and pointer swap) is rolled FORWARD — the ledger is
-      that path's commit point;
-    - an unledger'd v-dir at the claimed slot (any writer's crash
-      between snapshot move and ledger/pointer write) is deleted under
-      the claim, so orphan data can never surface as a committed
-      version once the pointer passes it.
-
-    The claim — not the pre-claim pointer read — is the serialization
-    point: the pointer is re-read AFTER _try_claim succeeds, and if it
-    moved (a concurrent writer fully committed slot v and released its
-    claim inside the read→claim window) the claim is released and the
-    loop retries from a fresh read. Acting on the stale read would
-    delete the committed v-dir as an "orphan" and republish its slot.
-    Ledger roll-forward likewise happens only while holding the claim
-    for the slot being advanced into, so a delayed pointer write can
-    never regress the pointer below a newer committed version.
-
-    Contention past ``max_wait_sec`` raises ConcurrentWriteError — a
-    crashed writer's stale claim is cleared by ``versioned.fsck``."""
-    import time
-
-    from .versioned import ConcurrentWriteError
-
-    deadline = time.monotonic() + max_wait_sec
-    while True:
-        ptr = _read_pointer(fs, p) or 0
-        v = ptr + 1
-        if not _try_claim(fs, p, v):
-            if time.monotonic() >= deadline:
-                raise ConcurrentWriteError(
-                    f"timed out waiting for commit slot v{v:05d} on {p}: "
-                    "another writer holds the claim (run versioned.fsck to "
-                    "clear a crashed writer's stale claim)"
-                )
-            time.sleep(0.05)
-            continue
-        # ---- claim v held: re-validate on fresh reads ----
-        try:
-            cur = _read_pointer(fs, p) or 0
-            if cur != ptr:
-                _release_claim(fs, p, v)
-                continue
-            vdir_exists = _dir_exists(fs, f"{p}/v{v:05d}")
-            if v in set(_ledger_entries(fs, p).values()) and vdir_exists:
-                # ledger-committed but unpointed (crash between ledger
-                # append and pointer swap): roll forward UNDER claim v,
-                # then retry for the next slot.
-                _write_pointer_file(fs, p, v)
-                _release_claim(fs, p, v)
-                continue
-            if vdir_exists:
-                # unledger'd dir above the pointer: a crashed writer's
-                # orphan — delete it under the claim.
-                fs.delete_dir(f"{p}/v{v:05d}")
-            return v
-        except BaseException:
-            # every non-return exit under the claim releases it, so a
-            # transient IO error during re-validation can never leak
-            # the marker and block later writers until timeout + fsck
-            _release_claim(fs, p, v)
-            raise
 
 
 # Filters are shipped to executors as plain tuples (pyarrow expressions
@@ -723,6 +599,33 @@ def _filters_to_arrow_expr(specs: list[tuple]):
     return expr
 
 
+def _parquet_dataset(fs: "pafs.FileSystem", path: str):
+    """One data file as a pyarrow dataset in the types Spark's Arrow
+    bridge accepts. Spark writes TIMESTAMP columns as INT96 by default,
+    which pyarrow reads as naive ``timestamp[ns]``: Spark rejects the
+    unit, and a naive type would read as wall-clock. INT96 holds
+    UTC-normalized instants, so those columns are coerced to
+    microseconds and typed ``timestamp[us, UTC]`` — TimestampType, the
+    same instants ``versioned.read_table`` returns."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    fmt = pads.ParquetFileFormat(
+        read_options=pads.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+    )
+    ds = pads.dataset(path, format=fmt, filesystem=fs)
+    md = next(ds.get_fragments()).metadata.schema
+    cols = [md.column(i) for i in range(len(md))]
+    int96 = {c.path for c in cols if c.physical_type == "INT96"}
+    if not int96:
+        return ds
+    utc = pa.timestamp("us", tz="UTC")
+    schema = pa.schema(
+        [f.with_type(utc) if f.name in int96 else f for f in ds.schema]
+    )
+    return pads.dataset(path, schema=schema, format=fmt, filesystem=fs)
+
+
 def _read_parquet_batches(
     file_path: str,
     columns: list[str],
@@ -740,10 +643,9 @@ def _read_parquet_batches(
     specs referencing them are dropped for this file (pruning only;
     Spark re-applies every filter above)."""
     import pyarrow as pa
-    import pyarrow.dataset as pads
 
     fs, p = _fs_and_path(file_path)
-    ds = pads.dataset(p, format="parquet", filesystem=fs)
+    ds = _parquet_dataset(fs, p)
     have = set(ds.schema.names)
     missing = [
         c for c in columns if c not in have and added_arrow and c in added_arrow
@@ -838,7 +740,7 @@ class VersionedReader(DataSourceReader):
         # self._resolved_v in partitions()) the file list must all come
         # from the SAME version, or a commit racing the plan would
         # apply one version's mapping to another version's files
-        v, _snap = _resolve_version(table_dir, version)
+        v = _resolve_version(table_dir, version)
         self._resolved_v = v
         mapping = _manifest_columns(fs, p, v) or []
         self._log2phys = {c["name"]: c["physical"] for c in mapping}
@@ -871,7 +773,7 @@ class VersionedReader(DataSourceReader):
         fs, p = _fs_and_path(self._table_dir)
         v = getattr(self, "_resolved_v", None)
         if v is None:  # instances built without __init__ (tests)
-            v, _snap = _resolve_version(self._table_dir, self._version)
+            v = _resolve_version(self._table_dir, self._version)
         prefix = _uri_prefix(self._table_dir)
         files = _version_files(fs, p, v, prefix)
         if self._pushed:
@@ -1074,7 +976,7 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         # files carry the latest mapping's physical names; mapping-
         # reset rewrites carry the logical names — both resolve here.
         fs, p = _fs_and_path(table_dir)
-        vs = _list_versions(fs, p)
+        vs = versions(table_dir, _backend(table_dir))
         mapping = (_manifest_columns(fs, p, vs[-1]) if vs else None) or []
         self._latest_mapping = mapping
         self._read_cols = [
@@ -1106,7 +1008,7 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         so ids are only meaningful WITHIN an era. Cached per retained-
         version set (one manifest GET per version when history
         changes)."""
-        vs = tuple(_list_versions(fs, p))
+        vs = tuple(versions(self._table_dir, _backend(self._table_dir)))
         cache = getattr(self, "_era_cache", None)
         if cache is not None and cache[0] == vs:
             return cache[1]
@@ -1276,8 +1178,7 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         return off
 
     def _initial_offset(self) -> dict:
-        fs, p = _fs_and_path(self._table_dir)
-        vs = _list_versions(fs, p)
+        vs = versions(self._table_dir, _backend(self._table_dir))
         # getattr: tolerate instances built without __init__ (tests,
         # legacy pickles) — absent attribute means no startingVersion
         sv = getattr(self, "_starting_version", None)
@@ -1316,10 +1217,10 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         return {"version": (vs[0] - 1) if vs else 0}
 
     def latestOffset(self) -> dict:  # noqa: N802
-        fs, p = _fs_and_path(self._table_dir)
-        v = _read_pointer(fs, p)
+        backend = _backend(self._table_dir)
+        v = latest_version(self._table_dir, backend)
         if v is None:
-            vs = _list_versions(fs, p)
+            vs = versions(self._table_dir, backend)
             v = vs[-1] if vs else 0
         max_files = getattr(self, "_max_files", None)
         max_bytes = getattr(self, "_max_bytes", None)
@@ -1335,6 +1236,7 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         if base is None:
             base = self._initial_offset()
         bv, bi = _feed_parse(base)
+        fs, p = _fs_and_path(self._table_dir)
         prefix = _uri_prefix(self._table_dir)
         taken_files = 0
         taken_bytes = 0
@@ -1350,7 +1252,7 @@ class VersionFeedStreamReader(DataSourceStreamReader):
                 return False
             return True
 
-        vs = _list_versions(fs, p)
+        vs = versions(self._table_dir, backend)
         pos_v, pos_i = bv, bi
         for w in vs:
             if w < bv or (w == bv and bi is None):
@@ -1516,8 +1418,6 @@ class VersionFeedDataSource(DataSource):
         )
 
 
-
-
 # ---------------------------------------------------------------------------
 # batch writer: df.write.format("fp_versioned") with a real commit protocol
 # ---------------------------------------------------------------------------
@@ -1542,37 +1442,20 @@ class VersionedArrowWriter(DataSourceArrowWriter):
     history is how the old data remains reachable."""
 
     def __init__(self, table_dir: str):
-        import threading
         import uuid
 
         self._table_dir = table_dir
-        self._staging = f"{table_dir}/_staging_{uuid.uuid4().hex[:12]}"
+        # one writer id names the staging dir and the commit's claim
+        # lease, so fsck keeps a committing writer's staging
+        self._wid = uuid.uuid4().hex[:12]
+        self._staging = f"{table_dir}/_staging_{self._wid}"
         # driver-side staging lease, HEARTBEATED for as long as the
         # staging dir exists (a write job can run far past the 60 s
         # lease TTL; a one-shot lease would leave its staged files
-        # sweepable by a concurrent versioned.fsck mid-job). The daemon
-        # thread self-terminates when commit/abort removes the dir —
-        # writer instances in executor worker processes skip the
-        # thread entirely (the driver-side instance owns liveness).
-        fs, staging = _fs_and_path(self._staging)
-        fs.create_dir(staging, recursive=True)
-        _write_lease_file(fs, f"{staging}/_lease")
-
-        def _beat() -> None:
-            import time as _t
-
-            import pyarrow.fs as pafs
-
-            while True:
-                _t.sleep(15.0)
-                try:
-                    if fs.get_file_info(staging).type == pafs.FileType.NotFound:
-                        return  # committed or aborted: staging is gone
-                    _write_lease_file(fs, f"{staging}/_lease")
-                except Exception:
-                    return
-
-        threading.Thread(target=_beat, daemon=True).start()
+        # sweepable by a concurrent versioned.fsck mid-job). Writer
+        # instances unpickled in executor workers never run __init__,
+        # so only the driver-side instance heartbeats.
+        _heartbeat_staging(_backend(table_dir), self._staging, self._wid)
 
     def write(self, iterator):
         import uuid
@@ -1594,35 +1477,15 @@ class VersionedArrowWriter(DataSourceArrowWriter):
         return _FileCommit(name)
 
     def commit(self, messages):
-        fs, p = _fs_and_path(self._table_dir)
-        _, staging = _fs_and_path(self._staging)
-        # optimistic concurrency: the claim marker serializes version
-        # allocation against every other writer (batch, streaming, and
-        # versioned.write_version) — see _claim_commit_slot.
-        v = _claim_commit_slot(fs, p)
-        try:
-            snap = f"{p}/v{v:05d}"
-            fs.create_dir(snap, recursive=True)
-            for m in messages:
-                if m is not None and m.file_name is not None:
-                    fs.move(f"{staging}/{m.file_name}", f"{snap}/{m.file_name}")
-            try:
-                fs.delete_dir(staging)
-            except FileNotFoundError:
-                pass  # all tasks were empty: nothing was staged
-            # pointer swap: write-tmp + move (rename) — atomic on
-            # local/HDFS, copy+delete on S3-likes (same caveat as
-            # HadoopFsBackend; a table-format log is the upgrade path).
-            _write_pointer_file(fs, p, v)
-        finally:
-            _release_claim(fs, p, v)
+        # the claim protocol serializes this commit against every other
+        # writer (batch, streaming, and versioned.write_version)
+        backend = _backend(self._table_dir)
+        files = [m.file_name for m in messages if m is not None and m.file_name]
+        _commit_files(self._table_dir, backend, self._staging, files, self._wid)
+        backend.rmtree(self._staging)
 
     def abort(self, messages):
-        fs, staging = _fs_and_path(self._staging)
-        try:
-            fs.delete_dir(staging)
-        except FileNotFoundError:
-            pass
+        _backend(self._table_dir).rmtree(self._staging)
 
 
 class VersionedStreamArrowWriter(DataSourceStreamArrowWriter):
@@ -1651,12 +1514,10 @@ class VersionedStreamArrowWriter(DataSourceStreamArrowWriter):
     the fix in the message (use a fresh txnAppId). Empty micro-batches
     (no rows anywhere) commit no version. ``abort`` removes only the
     aborted epoch's staged files. Concurrent writers on one table are
-    serialized per-commit by the claim protocol (_claim_commit_slot);
+    serialized per-commit by the claim protocol (versioned._claim_slot);
     two SIMULTANEOUS streaming queries sharing one txnAppId remain a
     configuration error (their batchId sequences interleave in one
     ledger scope)."""
-
-    _LEDGER = _LEDGER_FILE
 
     def __init__(self, table_dir: str, app_id: str = "default"):
         if not app_id or not re.fullmatch(r"[A-Za-z0-9_.\-]+", app_id):
@@ -1691,10 +1552,7 @@ class VersionedStreamArrowWriter(DataSourceStreamArrowWriter):
             pq.write_table(pa.Table.from_batches(batches), out)
         return _FileCommit(name)
 
-    def _ledger(self, fs, p) -> dict[tuple[str, int], int]:
-        return _ledger_entries(fs, p)
-
-    def _sweep_staging(self, fs, staging) -> None:
+    def _sweep_staging(self, backend) -> None:
         """Remove everything left in THIS RUN's staging dir (the dir is
         run-unique, so no other query's files can be here). Safe at
         commit/replay time: only this epoch's tasks write staging, and
@@ -1702,23 +1560,15 @@ class VersionedStreamArrowWriter(DataSourceStreamArrowWriter):
         discardable by definition — its message never reaches commit).
         A crashed run's abandoned staging dir is cleared by
         ``versioned.fsck``."""
-        import pyarrow.fs as pafs
-
-        try:
-            infos = fs.get_file_info(pafs.FileSelector(staging, recursive=False))
-        except FileNotFoundError:
-            return
-        for i in infos:
-            if i.base_name == "_lease":
-                continue  # liveness marker persists across epochs
-            try:
-                fs.delete_file(i.path)
-            except (FileNotFoundError, OSError):
-                pass
+        for name in backend.list_names(self._staging):
+            if name != "_lease":  # liveness marker persists across epochs
+                backend.delete_file(f"{self._staging}/{name}")
 
     def commit(self, messages, batchId):  # noqa: N803 (Spark API)
-        fs, p = _fs_and_path(self._table_dir)
-        _, staging = _fs_and_path(self._staging)
+        import uuid
+
+        backend = _backend(self._table_dir)
+        wid = uuid.uuid4().hex[:12]
         # refresh the app-scoped staging lease every epoch (driver-side,
         # atomic tmp+rename): a live stream's staged files stay
         # fsck-proof as long as batches land within the lease TTL —
@@ -1726,10 +1576,9 @@ class VersionedStreamArrowWriter(DataSourceStreamArrowWriter):
         # slow store) should raise fsck's claim_ttl_sec accordingly;
         # the lease protocol bounds the exposure, it cannot remove it
         # without a per-executor heartbeat
-        fs.create_dir(staging, recursive=True)
-        _write_lease_file(fs, f"{staging}/_lease")
+        _lease_staging(backend, self._staging, wid)
         files = [m.file_name for m in messages if m is not None and m.file_name]
-        ledger = self._ledger(fs, p)
+        ledger = _ledger_entries(self._table_dir, backend)
         key = (self._app, batchId)
         mine = [b for (a, b) in ledger if a == self._app]
         high = max(mine) if mine else None
@@ -1737,15 +1586,12 @@ class VersionedStreamArrowWriter(DataSourceStreamArrowWriter):
             if batchId == high:
                 # Replayed NEWEST epoch (crash between sink commit and
                 # checkpoint commit): the LEDGER is the commit point, so
-                # this epoch already published. Repair the pointer if
-                # the crash hit between ledger write and pointer swap,
-                # release that slot's stale claim, then discard the
-                # re-staged files — nothing publishes twice.
-                v = ledger[key]
-                if (_read_pointer(fs, p) or 0) < v:
-                    _write_pointer_file(fs, p, v)
-                _release_claim(fs, p, v)
-                self._sweep_staging(fs, staging)
+                # this epoch already published. Roll the pointer
+                # forward if the crash hit between ledger write and
+                # pointer swap, then discard the re-staged files —
+                # nothing publishes twice.
+                _finish_replayed_commit(self._table_dir, backend, ledger[key])
+                self._sweep_staging(backend)
                 return
             # A genuine crash replay can only replay the newest epoch —
             # an older batchId means the CHECKPOINT WAS RESET and this
@@ -1771,42 +1617,19 @@ class VersionedStreamArrowWriter(DataSourceStreamArrowWriter):
             )
         if not files:
             return  # empty micro-batch publishes nothing
-        # Claim-protocol allocation: serializes this commit against
-        # every other writer and deletes any unledger'd orphan dir at
-        # the claimed slot (see _claim_commit_slot).
-        v = _claim_commit_slot(fs, p)
-        try:
-            snap = f"{p}/v{v:05d}"
-            fs.create_dir(snap, recursive=True)
-            for name in files:
-                fs.move(f"{staging}/{name}", f"{snap}/{name}")
-            # Commit order: ledger FIRST (the idempotence record),
-            # pointer second. A crash between the two is repaired on
-            # replay above (and by any writer's roll-forward in
-            # _claim_commit_slot); the reverse order would let a
-            # replayed epoch double-publish.
-            ledger[key] = v
-            ltmp = f"{p}/._commits.tmp"
-            with fs.open_output_stream(ltmp) as out:
-                out.write(
-                    "\n".join(
-                        f"{a}:{b}:{w}" for (a, b), w in sorted(ledger.items())
-                    ).encode()
-                )
-            fs.move(ltmp, f"{p}/{self._LEDGER}")
-            _write_pointer_file(fs, p, v)
-        finally:
-            _release_claim(fs, p, v)
-        self._sweep_staging(fs, staging)
+        # ledger first, pointer second: a crash between the two is
+        # repaired on replay above (and by any writer's roll-forward in
+        # versioned._claim_slot)
+        _commit_files(
+            self._table_dir, backend, self._staging, files, wid, ledger_key=key
+        )
+        self._sweep_staging(backend)
 
     def abort(self, messages, batchId):  # noqa: N803
-        fs, staging = _fs_and_path(self._staging)
+        backend = _backend(self._table_dir)
         for m in messages:
             if m is not None and getattr(m, "file_name", None):
-                try:
-                    fs.delete_file(f"{staging}/{m.file_name}")
-                except FileNotFoundError:
-                    pass
+                backend.delete_file(f"{self._staging}/{m.file_name}")
 
 
 def register_python_sources(spark) -> None:

@@ -12,7 +12,8 @@ Layout:
                               publication shape)
         _data/<writer>/       manifest-mode data files (never moved)
         _LATEST               text file holding the current version number
-        _COMMITS              streaming-sink idempotence ledger (pyds)
+        _COMMITS              streaming-sink idempotence ledger:
+                              appId:batchId:version lines
         _claim_v00003         transient commit-slot claim markers
                               (each carries a heartbeated lease)
 
@@ -22,10 +23,14 @@ atomic rename — readers either see the old version or the new one,
 never a partial write (single-filesystem semantics; on object stores a
 real table format's log gives the same property transactionally).
 
-Concurrent writers serialize through an optimistic claim protocol
+Concurrent writers serialize through ONE optimistic claim protocol
 (``_claim_slot``): version N can only be published by the writer that
 exclusively created ``_claim_v{N}``, and N is always pointer+1, so two
-committers can never both win a slot (the pointer race is gone).
+committers can never both win a slot (the pointer race is gone). Every
+writer commits through it — ``write_version`` and the table operations
+built on it, and the Python DataSource writers in ``pyds.py``
+(``_commit_files``), which run in Python workers without a
+SparkSession and so hand in a pure-Python backend.
 Read-modify-write ops (MERGE, DELETE) pass the version they read as
 ``base_version`` and fail with :class:`ConcurrentWriteError` if anyone
 committed in between — re-read and retry, Delta-style optimistic
@@ -915,20 +920,28 @@ def latest_version(table_dir: str, backend=None) -> int | None:
     return int(txt.strip()) if txt is not None else None
 
 
-def _ledger_versions(table_dir: str, backend) -> set[int]:
-    """Versions recorded in the streaming sink's ``_COMMITS`` ledger
-    (both the legacy ``batch:version`` and the app-scoped
-    ``app:batch:version`` line formats). For those versions the LEDGER
-    is the commit point, so they are committed even when the pointer
-    swap was lost to a crash."""
+def _ledger_entries(table_dir: str, backend) -> dict[tuple[str, int], int]:
+    """The streaming sink's ``_COMMITS`` ledger: (appId, batchId) ->
+    version. Legacy 2-field lines (``batch:version``) read back under
+    appId 'default'."""
     txt = backend.read_text(f"{table_dir.rstrip('/')}/{_LEDGER}")
-    if not txt:
-        return set()
-    out = set()
-    for ln in txt.strip().splitlines():
-        if ln:
-            out.add(int(ln.rsplit(":", 1)[1]))
+    out: dict[tuple[str, int], int] = {}
+    for ln in (txt or "").strip().splitlines():
+        if not ln:
+            continue
+        parts = ln.split(":")
+        if len(parts) == 2:
+            out[("default", int(parts[0]))] = int(parts[1])
+        else:
+            out[(":".join(parts[:-2]), int(parts[-2]))] = int(parts[-1])
     return out
+
+
+def _ledger_versions(table_dir: str, backend) -> set[int]:
+    """Versions recorded in the ``_COMMITS`` ledger. For those versions
+    the LEDGER is the commit point, so they are committed even when the
+    pointer swap was lost to a crash."""
+    return set(_ledger_entries(table_dir, backend).values())
 
 
 def _swap_pointer(backend, td: str, v: int, expected_prev: int) -> None:
@@ -989,9 +1002,10 @@ def _claim_slot(
     writer_id: str | None = None,
 ) -> int:
     """Optimistic-concurrency commit-slot allocation: returns version
-    ``committed + 1`` with its ``_claim_v{N}`` marker held (the same
-    protocol — and the same marker files — as the Python DataSource
-    writers in ``pyds.py``, so mixed writers serialize correctly).
+    ``committed + 1`` with its ``_claim_v{N}`` marker held. Every
+    writer allocates here — ``write_version`` and the Python DataSource
+    writers alike (via ``_commit_files``) — so mixed writers serialize
+    on the same marker files.
 
     The claim is the serialization point: exclusive-create means only
     one writer can own a slot number, and the pointer only advances to
@@ -1014,7 +1028,7 @@ def _claim_slot(
     under the claim closes that window: if the pointer moved, release
     and retry from a fresh read.
 
-    Repairs on the way in (shared with pyds._claim_commit_slot):
+    Repairs on the way in:
     ledger'd-but-unpointed versions roll FORWARD — performed only while
     holding the claim for the slot being advanced into, so a delayed
     roll-forward write can never regress the pointer below a newer
@@ -1281,6 +1295,93 @@ def _publish(
     _swap_pointer(backend, td, v, v - 1)
     if manifest_files is not None and staging:
         backend.delete_file(f"{staging}/_lease")
+
+
+def _commit_files(
+    table_dir: str,
+    backend,
+    staging: str,
+    files: list[str],
+    writer_id: str,
+    ledger_key: tuple[str, int] | None = None,
+) -> int:
+    """The Python DataSource writers' commit: publish exactly ``files``
+    (names under ``staging``) as the next copy-published version and
+    return it. A failed or speculative task can leave extra parquet in
+    staging, so the named files move one by one rather than the whole
+    dir (``_publish``). ``ledger_key`` (appId, batchId) is the streaming
+    sink's epoch: it is recorded in ``_COMMITS`` — re-read under the
+    claim, so concurrent apps' entries survive — BEFORE the pointer
+    swap, because the ledger is that path's commit point (a crash
+    between the two rolls forward; the reverse order would let a
+    replayed epoch publish twice). Claim ownership is verified before
+    the data moves and again before the ledger and pointer writes, the
+    same checks ``_publish`` makes."""
+    td = table_dir.rstrip("/")
+    v = _claim_slot(table_dir, backend, None, writer_id=writer_id)
+    try:
+        _verify_claim_ownership(backend, td, v, writer_id)
+        snap = f"{td}/v{v:05d}"
+        backend.makedirs(snap)
+        for name in files:
+            backend.move(f"{staging}/{name}", f"{snap}/{name}")
+        _verify_claim_ownership(backend, td, v, writer_id)
+        if ledger_key is not None:
+            ledger = _ledger_entries(table_dir, backend)
+            ledger[ledger_key] = v
+            backend.write_text_atomic(
+                f"{td}/{_LEDGER}",
+                "\n".join(f"{a}:{b}:{w}" for (a, b), w in sorted(ledger.items())),
+            )
+        _swap_pointer(backend, td, v, v - 1)
+    finally:
+        backend.delete_file(f"{td}/_claim_v{v:05d}")
+    return v
+
+
+def _finish_replayed_commit(table_dir: str, backend, v: int) -> None:
+    """A streaming epoch replays whose ``_COMMITS`` entry is ``v``: its
+    first commit reached the ledger, but a crash may have hit before
+    the pointer swap or the claim release. That claim died with the
+    crashed run, so it is dropped; if the pointer is still below ``v``,
+    ``_claim_slot`` rolls it forward under claim ``v`` like any
+    ledger'd slot, and the slot it then hands back is released
+    unused."""
+    td = table_dir.rstrip("/")
+    backend.delete_file(f"{td}/_claim_v{v:05d}")
+    if (latest_version(table_dir, backend) or 0) < v:
+        nxt = _claim_slot(table_dir, backend, None)
+        backend.delete_file(f"{td}/_claim_v{nxt:05d}")
+
+
+def _lease_staging(backend, staging: str, writer_id: str) -> None:
+    """Create ``staging`` and (re)write its ``_lease``, so fsck's
+    staging sweep sees the dir as live for one TTL."""
+    backend.makedirs(staging)
+    backend.write_text_atomic(f"{staging}/_lease", _lease_line(writer_id))
+
+
+def _heartbeat_staging(backend, staging: str, writer_id: str) -> None:
+    """``_lease_staging``, then refresh the lease every TTL/4 from a
+    daemon thread until the staging dir is gone (committed or aborted):
+    for a writer whose staging outlives any one call, where no ``with
+    _Lease`` block can span it (the Python DataSource batch writer
+    stages from executor workers and commits from another process)."""
+    _lease_staging(backend, staging, writer_id)
+
+    def _beat() -> None:
+        while True:
+            time.sleep(_LEASE_TTL_SEC / 4)
+            try:
+                if "_lease" not in backend.list_names(staging):
+                    return  # committed or aborted: staging is gone
+                backend.write_text_atomic(
+                    f"{staging}/_lease", _lease_line(writer_id)
+                )
+            except Exception:
+                return
+
+    threading.Thread(target=_beat, daemon=True).start()
 
 
 def _carried_clustered(body: dict, carried_rels: list[str]) -> dict | None:

@@ -146,3 +146,62 @@ def test_queries_janitor_releases_session_state(spark):
     # and every driver-facing entry is wrapped with the janitor
     q = e.queries()
     assert all(hasattr(fn, "__wrapped__") for fn in q.values())
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ev18_session_error_hour_overlap",
+        "ev19_session_path_trigrams",
+        "ev20_user_feature_assembly",
+    ],
+)
+def test_epoch_oracles_truncate_at_day_boundary(spark, tmp_path, name):
+    """The Spark builders' unix_timestamp truncates to the second, and
+    so must the oracles: DuckDB ROUNDS when it casts a DOUBLE epoch to
+    BIGINT, which moves an event in the last half second of a UTC day
+    onto the next day. The fixtures never hit that case; this events
+    table does (23:59:59.7 and 23:59:59.6 events, one of them the
+    corpus maximum's neighbour)."""
+    from datetime import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [
+        (1, "2024-01-01 23:30:00", "view", 0.0),
+        (1, "2024-01-01 23:59:59.7", "error", 0.0),
+        (1, "2024-01-02 00:10:00", "click", 0.0),
+        (1, "2024-01-02 00:20:00", "purchase", 12.5),
+        (2, "2024-01-01 23:59:59.6", "error", 0.0),
+        (2, "2024-01-02 00:00:30", "error", 0.0),
+        (2, "2024-01-02 00:05:00", "view", 0.0),
+        (3, "2024-01-02 23:59:59.5", "click", 0.0),
+        (3, "2024-01-03 10:00:00", "view", 0.0),
+        (3, "2024-01-03 12:00:00.8", "purchase", 3.25),
+    ]
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(rows)), pa.int64()),
+                "ts": pa.array(
+                    [datetime.fromisoformat(r[1]) for r in rows], pa.timestamp("us")
+                ),
+                "user_id": pa.array([r[0] for r in rows], pa.int64()),
+                "event_type": [r[2] for r in rows],
+                "value": [r[3] for r in rows],
+                "props": ["{}"] * len(rows),
+            }
+        ),
+        sf / "events.parquet",
+    )
+    con = duckdb.connect()
+    try:
+        con.sql(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'")
+        spec = REGISTRY[name]
+        assert_matches_oracle(spec.builder(spark, str(sf)), con, spec.oracle, name=name)
+    finally:
+        con.close()

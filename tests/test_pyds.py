@@ -21,6 +21,12 @@ from fp_data_lakehouse_spark.sources.pyds import (
     _translate_filters,
     register_python_sources,
 )
+from fp_data_lakehouse_spark.sources.versioned import (
+    LocalFsBackend,
+    _ledger_entries,
+    latest_version,
+    versions,
+)
 
 from .conftest import SF_ORACLE
 
@@ -281,20 +287,19 @@ def test_stream_writer_replayed_epoch_publishes_nothing(tmp_path):
     batch = pa.RecordBatch.from_pydict({"k": [1, 2, 3]})
 
     w.commit([w.write(iter([batch]))], 0)
-    assert pyds._list_versions(*pyds._fs_and_path(d)) == [1]
+    assert versions(d) == [1]
 
     # epoch 0 REPLAY: re-staged file must be discarded, nothing published
     w.commit([w.write(iter([batch]))], 0)
-    fs, p = pyds._fs_and_path(d)
-    assert pyds._list_versions(fs, p) == [1]
+    assert versions(d) == [1]
     # only the liveness lease may persist across epochs in staging
     assert not os.path.exists(w._staging) or os.listdir(w._staging) in ([], ["_lease"])
 
     # next epoch publishes v2; empty epoch publishes nothing
     w.commit([w.write(iter([batch]))], 1)
     w.commit([w.write(iter([]))], 2)
-    assert pyds._list_versions(fs, p) == [1, 2]
-    assert pyds._read_pointer(fs, p) == 2
+    assert versions(d) == [1, 2]
+    assert latest_version(d) == 2
 
 
 def test_nested_types_through_batch_source(spark, tmp_path):
@@ -350,13 +355,12 @@ def test_stream_writer_replay_repairs_pointer(tmp_path):
     w = VersionedStreamArrowWriter(d)
     batch = pa.RecordBatch.from_pydict({"k": [1, 2]})
     w.commit([w.write(iter([batch]))], 0)
-    fs, p = pyds._fs_and_path(d)
-    assert pyds._read_pointer(fs, p) == 1
+    assert latest_version(d) == 1
     # simulate the crash window: ledger says v1 committed, pointer lost
-    fs.delete_file(f"{p}/_LATEST")
+    os.remove(f"{d}/_LATEST")
     w.commit([w.write(iter([batch]))], 0)  # replay of epoch 0
-    assert pyds._list_versions(fs, p) == [1], "replay must not double-publish"
-    assert pyds._read_pointer(fs, p) == 1, "replay must repair the pointer"
+    assert versions(d) == [1], "replay must not double-publish"
+    assert latest_version(d) == 1, "replay must repair the pointer"
 
 
 def test_writer_reclaims_orphan_snapshot_slot(spark, tmp_path):
@@ -377,9 +381,8 @@ def test_writer_reclaims_orphan_snapshot_slot(spark, tmp_path):
         f.write("not parquet")
     register_python_sources(spark)
     df.write.format("fp_versioned").option("path", d).mode("append").save()
-    fs, p = pyds._fs_and_path(d)
-    assert pyds._read_pointer(fs, p) == 2, "orphan slot must be reclaimed"
-    assert pyds._list_versions(fs, p) == [1, 2]
+    assert latest_version(d) == 2, "orphan slot must be reclaimed"
+    assert versions(d) == [1, 2]
     # the reclaimed v2 holds the NEW commit, not the orphan's garbage
     assert read_table(spark, d).count() == 10
     assert read_table(spark, d, version=2).count() == 10
@@ -429,28 +432,27 @@ def test_stream_writer_reset_checkpoint_raises(tmp_path):
     run1 = VersionedStreamArrowWriter(d, "appA")
     run1.commit([run1.write(iter([batch]))], 0)
     run1.commit([run1.write(iter([batch]))], 1)
-    fs, p = pyds._fs_and_path(d)
-    assert pyds._read_pointer(fs, p) == 2
+    assert latest_version(d) == 2
 
     # reset checkpoint, same appId: batch 0 is below appA's high-water
     # mark and NOT a replay of its newest epoch -> must raise, not drop
     run2 = VersionedStreamArrowWriter(d, "appA")
     with pytest.raises(ValueError, match="txnAppId"):
         run2.commit([run2.write(iter([batch]))], 0)
-    assert pyds._read_pointer(fs, p) == 2, "failed commit publishes nothing"
+    assert latest_version(d) == 2, "failed commit publishes nothing"
 
     # reset checkpoint, FRESH appId: own scope, publishes normally
     run3 = VersionedStreamArrowWriter(d, "appB")
     run3.commit([run3.write(iter([batch]))], 0)
-    assert pyds._read_pointer(fs, p) == 3
-    assert pyds._list_versions(fs, p) == [1, 2, 3]
+    assert latest_version(d) == 3
+    assert versions(d) == [1, 2, 3]
 
     # appB's replay of ITS newest epoch still dedups
     run3.commit([run3.write(iter([batch]))], 0)
-    assert pyds._read_pointer(fs, p) == 3
+    assert latest_version(d) == 3
 
     # ledger is app-scoped on disk
-    entries = pyds._ledger_entries(fs, p)
+    entries = _ledger_entries(d, LocalFsBackend())
     assert entries == {("appA", 0): 1, ("appA", 1): 2, ("appB", 0): 3}
 
 
@@ -462,8 +464,7 @@ def test_stream_writer_legacy_ledger_lines_parse(tmp_path):
     os.makedirs(d)
     with open(f"{d}/_COMMITS", "w") as f:
         f.write("0:1\n1:2")
-    fs, p = pyds._fs_and_path(d)
-    assert pyds._ledger_entries(fs, p) == {("default", 0): 1, ("default", 1): 2}
+    assert _ledger_entries(d, LocalFsBackend()) == {("default", 0): 1, ("default", 1): 2}
 
 
 def test_stream_writers_use_run_unique_staging(tmp_path):
@@ -484,8 +485,7 @@ def test_stream_writers_use_run_unique_staging(tmp_path):
         "another run's staged file must survive wa's sweep"
     )
     wb.commit([mb], 0)
-    fs, p = pyds._fs_and_path(d)
-    assert pyds._list_versions(fs, p) == [1, 2]
+    assert versions(d) == [1, 2]
 
 
 def test_stream_writer_rejects_bad_app_id(tmp_path):
@@ -497,38 +497,110 @@ def test_stream_writer_rejects_bad_app_id(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# round 7: claim protocol re-validates the pointer UNDER the claim
-# (advisor r6 TOCTOU finding — same fix as versioned._claim_slot)
+# one commit protocol: the writers commit through versioned._claim_slot
 # ---------------------------------------------------------------------------
 
 
-def test_claim_commit_slot_revalidates_pointer(spark, tmp_path, monkeypatch):
-    """Concurrent commit lands inside the pointer-read -> claim window:
-    the stale claimer must NOT delete the committed v-dir as an orphan
-    and republish its slot — it must retry and take the NEXT slot."""
+def test_stream_sink_lost_claim_publishes_nothing(tmp_path, monkeypatch):
+    """A stream-sink commit whose claim lease another writer id took
+    over before the pointer swap (a lease reclaimed while the commit
+    stalled) raises ConcurrentWriteError and publishes no version —
+    the ownership check every versioned.py commit makes."""
+    from fp_data_lakehouse_spark.sources import versioned
+    from fp_data_lakehouse_spark.sources.pyds import VersionedStreamArrowWriter
+
+    d = str(tmp_path / "lost")
+    w = VersionedStreamArrowWriter(d, "app")
+    batch = pa.RecordBatch.from_pydict({"k": [1, 2]})
+    w.commit([w.write(iter([batch]))], 0)
+    real_claim_slot = versioned._claim_slot
+
+    def reclaimed(table_dir, backend, base_version, **kw):
+        v = real_claim_slot(table_dir, backend, base_version, **kw)
+        backend.write_text_atomic(
+            f"{table_dir}/_claim_v{v:05d}", versioned._lease_line("intruder")
+        )
+        return v
+
+    monkeypatch.setattr(versioned, "_claim_slot", reclaimed)
+    with pytest.raises(versioned.ConcurrentWriteError, match="no longer owned"):
+        w.commit([w.write(iter([batch]))], 1)
+    assert latest_version(d) == 1
+    assert versions(d) == [1]
+    assert _ledger_entries(d, LocalFsBackend()) == {("app", 0): 1}
+
+
+def test_uri_table_commits_through_arrow_backend(tmp_path):
+    """A scheme:// table resolves and commits through the pyarrow.fs
+    backend: the sink publishes, a replay dedups, the version resolves
+    through the same backend, and the claim's check-then-create
+    degradation warns."""
+    from fp_data_lakehouse_spark.sources.pyds import (
+        VersionedStreamArrowWriter,
+        _resolve_version,
+    )
+
+    d = str(tmp_path / "uri")
+    w = VersionedStreamArrowWriter(f"file://{d}")
+    batch = pa.RecordBatch.from_pydict({"k": [1, 2, 3]})
+    with pytest.warns(RuntimeWarning, match="check-then-create"):
+        w.commit([w.write(iter([batch]))], 0)
+    w.commit([w.write(iter([batch]))], 0)  # replay: publishes nothing
+    w.commit([w.write(iter([batch]))], 1)
+    assert versions(d) == [1, 2] and latest_version(d) == 2
+    assert _resolve_version(f"file://{d}", None) == 2
+    assert _ledger_entries(d, LocalFsBackend()) == {
+        ("default", 0): 1,
+        ("default", 1): 2,
+    }
+    assert [n for n in os.listdir(d) if n.startswith("_claim_")] == []
+
+
+def test_timestamp_columns_read_as_instants(spark, tmp_path):
+    """Spark writes TIMESTAMP as INT96 parquet, which pyarrow reads as
+    naive timestamp[ns] (Spark's Arrow bridge rejected it). Both Python
+    sources read such a column as TimestampType, with the instants
+    versioned.read_table returns — including one past the ns range."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
     from fp_data_lakehouse_spark.sources.versioned import read_table, write_version
 
-    d = str(tmp_path / "toctou")
-    write_version(spark.range(3).select(F.col("id").alias("k")), d)  # v1
-    fs, p = pyds._fs_and_path(d)
+    d = str(tmp_path / "ts")
+    df = spark.createDataFrame(
+        [
+            (1, "2024-01-01 23:59:59.7"),
+            (2, "1995-06-30 00:00:00.123456"),
+            (3, "2300-01-01 12:00:00"),
+            (4, None),
+        ],
+        "k long, s string",
+    ).selectExpr("k", "CAST(s AS TIMESTAMP) AS ts")
+    write_version(df, d, manifest=True)
+    body = __import__("json").load(open(f"{d}/_manifest_v00001.json"))
+    md = pq.ParquetFile(f"{d}/{body['files'][0]}").schema
+    assert md.column(1).physical_type == "INT96"
+    register_python_sources(spark)
+    want = {(r.k, r.ts) for r in read_table(spark, d).collect()}
+    assert len(want) == 4
 
-    real_try_claim = pyds._try_claim
-    fired = {"done": False}
+    batch = spark.read.format("fp_versioned").option("path", d).load()
+    assert batch.schema["ts"].dataType.typeName() == "timestamp"
+    assert {(r.k, r.ts) for r in batch.collect()} == want
 
-    def racing_try_claim(fs_, p_, v_):
-        if not fired["done"]:
-            fired["done"] = True
-            # a concurrent writer fully commits slot v and releases its
-            # claim BEFORE this writer's create lands
-            write_version(spark.range(99).select(F.col("id").alias("k")), d)
-        return real_try_claim(fs_, p_, v_)
-
-    monkeypatch.setattr(pyds, "_try_claim", racing_try_claim)
-    v = pyds._claim_commit_slot(fs, p)
-    assert v == 3, "stale claimer must retry past the committed slot"
-    pyds._release_claim(fs, p, v)
-    # the concurrent commit's data is intact
-    assert read_table(spark, d, version=2).count() == 99
+    name = f"tsfeed_{uuid.uuid4().hex[:6]}"
+    q = (
+        spark.readStream.format("fp_versioned_feed")
+        .option("path", d)
+        .load()
+        .writeStream.format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert {(r.k, r.ts) for r in spark.table(name).collect()} == want
 
 
 # ---------------------------------------------------------------------------
