@@ -119,6 +119,13 @@ def incremental_load(
     from .star import build_dim_nilai, build_fact_nilai_mk
     from .extract import extract_courses, extract_students
 
+    # Decode once per batch: the students and courses extractions both
+    # read ``docs``, and each reader of an unmaterialized decode re-runs
+    # the binaryFile scan and the Python PDF decode. Eager, so the lazy
+    # extraction checkpoints below never materialize this one inside
+    # their own jobs (nested lazy checkpoints log spurious accumulator
+    # errors).
+    docs = docs.localCheckpoint(eager=True)
     first_load = not os.path.exists(f"{warehouse_dir}/fact_nilai_mk.parquet")
     if first_load:
         tables = build_star_schema(spark, docs, scale_safe=scale_safe)

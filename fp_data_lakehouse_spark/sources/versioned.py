@@ -9,7 +9,8 @@ Layout:
                               its data files under _data/ in place
                               (write_version(manifest=True) — O(1)
                               metadata per commit, the Delta/Iceberg
-                              publication shape)
+                              publication shape) and recording their
+                              physical schema, so reads infer nothing
         _data/<writer>/       manifest-mode data files (never moved)
         _LATEST               text file holding the current version number
         _COMMITS              streaming-sink idempotence ledger:
@@ -874,25 +875,85 @@ def _to_logical(df: DataFrame, columns: list[dict] | None) -> DataFrame:
     return df.select(*out)
 
 
-def _read_physical(
-    spark: SparkSession, td: str, rels: list[str], columns: list[dict] | None
-) -> DataFrame:
-    """Scan the given data files under a column mapping. Once a table
-    has an ADDED column (any mapping entry with a declared ``type``),
-    its files are legitimately schema-heterogeneous — pre-add files
-    lack the new physical column — so the scan turns on parquet
-    ``mergeSchema`` (a distributed footer merge, metadata-plane cost
-    only) and backfills physical columns present in NO file as typed
-    NULLs, so downstream physical-name selects always resolve."""
+def _manifest_schema(body: dict):
+    """The physical Spark schema a manifest records (``StructType``), or
+    None for a manifest written before commits recorded it. Like a Delta
+    log's ``metaData.schemaString``, it lets a reader plan a scan without
+    opening a data file."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    txt = body.get("schema")
+    return StructType.fromJson(json.loads(txt)) if txt is not None else None
+
+
+def _as_nullable(dt):
+    """``dt`` as parquet schema inference returns it: Spark writes every
+    field, array element and map value as nullable."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _schema_json(df: DataFrame, body: dict | None = None, carried=()) -> str:
+    """The manifest ``schema`` field for files written from ``df``. When
+    the commit also carries files of manifest ``body`` by reference, the
+    field is what a footer merge over both would infer: the carried
+    schema with the new files' fields in place, then the new fields it
+    lacks."""
+    from pyspark.sql.types import StructType
+
+    new = _as_nullable(df.schema)
+    prev = _manifest_schema(body) if body is not None and carried else None
+    if prev is None:
+        return new.json()
+    by_name = {f.name: f for f in new.fields}
+    fields = [by_name.pop(f.name, f) for f in prev.fields]
+    return StructType(fields + list(by_name.values())).json()
+
+
+def _read_physical(spark: SparkSession, td: str, rels: list[str], body: dict) -> DataFrame:
+    """Scan the given data files of a manifest version under the
+    physical schema its manifest records: no footer-inference job, and
+    a file that predates an ADDED column (a mapping entry with a
+    declared ``type``) reads NULL for it, so downstream physical-name
+    selects always resolve.
+
+    A manifest written before commits recorded the schema falls back to
+    inference; once it has an added column, that scan turns on parquet
+    ``mergeSchema`` and backfills physical columns present in no file
+    as typed NULLs."""
+    paths = [f"{td}/{rel}" for rel in rels]
+    schema = _manifest_schema(body)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
     reader = spark.read
-    added = [c for c in (columns or []) if "type" in c]
+    added = [c for c in (body.get("columns") or []) if "type" in c]
     if added:
         reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*[f"{td}/{rel}" for rel in rels])
+    df = reader.parquet(*paths)
     for c in added:
         if c["physical"] not in df.columns:
             df = df.withColumn(c["physical"], F.lit(None).cast(c["type"]))
     return df
+
+
+# the public schema of a deletion-vector parquet (see _manifest_dv)
+_DV_SCHEMA = "file STRING, pos BIGINT"
+
+
+def _read_dv(spark: SparkSession, td: str, rels) -> DataFrame:
+    """Scan deletion-vector objects under their fixed schema."""
+    return spark.read.schema(_DV_SCHEMA).parquet(*sorted({f"{td}/{r}" for r in rels}))
 
 
 def _to_physical(df: DataFrame, columns: list[dict] | None) -> DataFrame:
@@ -1202,6 +1263,12 @@ def _collect_file_stats(staging: str, files: list[str]) -> dict:
     return out
 
 
+def _owns_claim(backend, td: str, v: int, writer_id: str) -> bool:
+    """Whether claim ``v``'s lease still names ``writer_id``."""
+    lease = backend.read_text(f"{td}/_claim_v{v:05d}")
+    return lease is not None and lease.strip().startswith(writer_id + " ")
+
+
 def _verify_claim_ownership(backend, td: str, v: int, writer_id: str) -> None:
     """A writer frozen past the lease TTL may have had its claim
     reclaimed (and its partial output GC'd) by a concurrent repair;
@@ -1210,14 +1277,22 @@ def _verify_claim_ownership(backend, td: str, v: int, writer_id: str) -> None:
     is gone or owned by someone else — narrowing the resume-after-
     reclaim race from the whole publish window to microseconds (the
     pointer CAS covers the pointer value itself)."""
-    lease = backend.read_text(f"{td}/_claim_v{v:05d}")
-    if lease is None or not lease.strip().startswith(writer_id + " "):
+    if not _owns_claim(backend, td, v, writer_id):
         raise ConcurrentWriteError(
             f"claim v{v} on {td} is no longer owned by writer "
             f"{writer_id}: its lease expired while the process was "
             "stalled and a repair reclaimed the slot — aborting the "
             "publish instead of committing a possibly-GC'd snapshot"
         )
+
+
+def _release_claim(backend, td: str, v: int, writer_id: str) -> None:
+    """Drop claim ``v`` if this writer still owns it. A writer that lost
+    its slot to a reclaim must leave the new owner's marker in place:
+    deleting it would let a third writer claim the slot while the owner
+    is still publishing."""
+    if _owns_claim(backend, td, v, writer_id):
+        backend.delete_file(f"{td}/_claim_v{v:05d}")
 
 
 def _publish(
@@ -1233,6 +1308,7 @@ def _publish(
     dv: dict | None = None,
     dv_rows: int | None = None,
     clustered: dict | None = None,
+    schema: str | None = None,
 ) -> None:
     """The commit choreography every publish path shares (so a fix to
     one cannot silently miss the others): verify claim ownership BEFORE
@@ -1247,7 +1323,12 @@ def _publish(
     normal path never sees a survivor) — while copy mode moves
     ``staging`` into the v-dir. Both then re-verify claim ownership
     and CAS the pointer; manifest mode finally drops the now-referenced
-    data prefix's lease. Caller holds claim ``v`` under its heartbeat."""
+    data prefix's lease. Caller holds claim ``v`` under its heartbeat.
+
+    ``schema`` (``StructType.json()``) is the physical Spark schema of
+    the snapshot's files, recorded so readers never infer it: paths that
+    write new files pass the schema of the frame they wrote, paths that
+    carry files by reference pass the previous manifest's."""
     import json
 
     _verify_claim_ownership(backend, td, v, writer_id)
@@ -1263,6 +1344,8 @@ def _publish(
         }
         if columns is not None:
             payload["columns"] = columns
+        if schema is not None:
+            payload["schema"] = schema
         if dv:
             payload["dv"] = dv
             if dv_rows is not None:
@@ -1335,7 +1418,7 @@ def _commit_files(
             )
         _swap_pointer(backend, td, v, v - 1)
     finally:
-        backend.delete_file(f"{td}/_claim_v{v:05d}")
+        _release_claim(backend, td, v, writer_id)
     return v
 
 
@@ -1492,11 +1575,12 @@ def write_version(
                     clustered={"cols": list(clustered_cols), "files": mfiles}
                     if clustered_cols
                     else None,
+                    schema=_schema_json(df),
                 )
             else:
                 _publish(backend, td, v, writer_id, staging=staging)
     finally:
-        backend.delete_file(f"{td}/_claim_v{v:05d}")
+        _release_claim(backend, td, v, writer_id)
     return v
 
 
@@ -1579,10 +1663,10 @@ def read_table(
             # nothing can match: an EMPTY frame with the snapshot's
             # logical schema (one sample file gives the schema; the
             # false filter prunes the scan itself)
-            sample = _read_physical(spark, td, files[:1], body.get("columns"))
+            sample = _read_physical(spark, td, files[:1], body)
             return _to_logical(sample, body.get("columns")).filter(F.lit(False))
         files = kept
-    raw = _read_physical(spark, td, files, body.get("columns"))
+    raw = _read_physical(spark, td, files, body)
     # only the SCANNED files' dv objects matter: skip-filter pruning
     # must not read (or anti-join) dvs that mask pruned-away files
     file_set = set(files)
@@ -1595,9 +1679,9 @@ def read_table(
         # row-group pruning, so pushed filters stay sound. The dv side
         # is broadcast-hinted only under the manifest-recorded row
         # count bound — see _DV_BROADCAST_MAX_ROWS.
-        dv_df = spark.read.parquet(
-            *sorted({f"{td}/{rel}" for rel in dv.values()})
-        ).select(F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos"))
+        dv_df = _read_dv(spark, td, dv.values()).select(
+            F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
+        )
         tagged = raw.select(
             "*",
             F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
@@ -1685,34 +1769,27 @@ def _dv_hinted(dv_df: DataFrame, dv_rows: int | None) -> DataFrame:
     return dv_df
 
 
-def _live_tagged(
-    spark,
-    td: str,
-    rels: list[str],
-    dv_map: dict,
-    dv_rows: int | None = None,
-    columns: list[dict] | None = None,
-) -> DataFrame:
-    """Physical rows of the given files tagged with ``__file`` (file
-    name) and ``__pos`` (row position), with dv-deleted positions
-    already removed — the frame every CoW operation must reason over
-    on a head that carries deletion vectors. ``columns`` (the head's
-    mapping) makes added-column physicals resolvable over pre-add
-    files (typed-NULL backfill via _read_physical)."""
-    raw = _read_physical(spark, td, rels, columns)
+def _live_tagged(spark, td: str, rels: list[str], body: dict) -> DataFrame:
+    """Physical rows of the given files of manifest ``body`` tagged with
+    ``__file`` (file name) and ``__pos`` (row position), with dv-deleted
+    positions already removed — the frame every CoW operation must
+    reason over on a head that carries deletion vectors. Added-column
+    physicals resolve over pre-add files (NULL via _read_physical)."""
+    raw = _read_physical(spark, td, rels, body)
     tagged = raw.select(
         F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("__file"),
         F.col("_metadata.row_index").alias("__pos"),
         "*",
     )
+    dv_map = body.get("dv") or {}
     rel_set = set(rels)
-    relevant = sorted({dv_map[rel] for rel in dv_map if rel in rel_set})
+    relevant = {dv_map[rel] for rel in dv_map if rel in rel_set}
     if relevant:
-        dv_df = spark.read.parquet(*[f"{td}/{r}" for r in relevant]).select(
+        dv_df = _read_dv(spark, td, relevant).select(
             F.col("file").alias("__file"), F.col("pos").alias("__pos")
         )
         tagged = tagged.join(
-            _dv_hinted(dv_df, dv_rows), ["__file", "__pos"], "left_anti"
+            _dv_hinted(dv_df, body.get("dv_rows")), ["__file", "__pos"], "left_anti"
         )
     return tagged
 
@@ -1761,7 +1838,7 @@ def delete_where_cow(
     # files are rewritten from their live rows, so the rewrite both
     # applies the old dv physically and sheds the newly deleted rows)
     head_dv_rows = head_body.get("dv_rows")
-    live = _live_tagged(spark, td, rels, dv_map, head_dv_rows, mapping)
+    live = _live_tagged(spark, td, rels, head_body)
     probe = live
     if mapping:
         probe = live.select(
@@ -1781,13 +1858,14 @@ def delete_where_cow(
     staging = f"{td}/{_DATA_PREFIX}/{writer_id}"
     backend.makedirs(staging)
     with _Lease(backend, f"{staging}/_lease", writer_id):
-        hit_live = _live_tagged(
-            spark, td, sorted(hit_rels), dv_map, head_dv_rows, mapping
-        ).drop("__file", "__pos")
+        hit_live = _live_tagged(spark, td, sorted(hit_rels), head_body).drop(
+            "__file", "__pos"
+        )
         survivors = _to_logical(hit_live, mapping).filter(~condition)
         # rewrites keep PHYSICAL names so they stay byte-compatible
         # with the files carried by reference
-        _to_physical(survivors, mapping).write.mode("append").parquet(staging)
+        written = _to_physical(survivors, mapping)
+        written.write.mode("append").parquet(staging)
         new_files = sorted(
             n for n in backend.list_names(staging) if n.endswith(".parquet")
         )
@@ -1813,9 +1891,10 @@ def delete_where_cow(
                 # carried subset — never under-gates the broadcast
                 dv_rows=head_dv_rows if carried_dv else None,
                 clustered=_carried_clustered(head_body, carried),
+                schema=_schema_json(written, head_body, carried),
             )
     finally:
-        backend.delete_file(f"{td}/_claim_v{v:05d}")
+        _release_claim(backend, td, v, writer_id)
     return v
 
 
@@ -1870,7 +1949,7 @@ def merge_into_version_cow(
     # dv-deleted row must not force that file's rewrite, and hit-file
     # rewrites re-stage live rows — applying the old dv physically
     head_dv_rows = head_body.get("dv_rows")
-    live = _live_tagged(spark, td, rels, dv_map, head_dv_rows, mapping)
+    live = _live_tagged(spark, td, rels, head_body)
     if mapping:
         phys = {c["name"]: c["physical"] for c in mapping}
         head_keys = live.select(
@@ -1894,17 +1973,18 @@ def merge_into_version_cow(
     backend.makedirs(staging)
     with _Lease(backend, f"{staging}/_lease", writer_id):
         if hit_rels:
-            hit_live = _live_tagged(
-                spark, td, sorted(hit_rels), dv_map, head_dv_rows, mapping
-            ).drop("__file", "__pos")
-            hit_rows = _to_logical(hit_live, mapping)
-            survivors = hit_rows.join(upd_keys, keys, "left_anti")
-            staged = survivors.unionByName(updates)
+            hit_live = _live_tagged(spark, td, sorted(hit_rels), head_body)
         else:
-            staged = updates  # pure insert: no file rewritten
+            # pure insert: no file is rewritten, but the empty head-
+            # shaped side keeps the new files in the head's column order
+            hit_live = live.filter(F.lit(False))
+        hit_rows = _to_logical(hit_live.drop("__file", "__pos"), mapping)
+        survivors = hit_rows.join(upd_keys, keys, "left_anti")
+        staged = survivors.unionByName(updates)
         # rewrites + inserts keep PHYSICAL names, byte-compatible with
         # the carried files
-        _to_physical(staged, mapping).write.mode("append").parquet(staging)
+        written = _to_physical(staged, mapping)
+        written.write.mode("append").parquet(staging)
         new_files = sorted(
             n for n in backend.list_names(staging) if n.endswith(".parquet")
         )
@@ -1928,9 +2008,10 @@ def merge_into_version_cow(
                 dv=carried_dv or None,
                 dv_rows=head_dv_rows if carried_dv else None,
                 clustered=_carried_clustered(head_body, carried),
+                schema=_schema_json(written, head_body, carried),
             )
     finally:
-        backend.delete_file(f"{td}/_claim_v{v:05d}")
+        _release_claim(backend, td, v, writer_id)
     return v
 
 
@@ -2104,7 +2185,7 @@ def delete_where_dv(
     # internal tag columns use collision-resistant names (a user table
     # may legitimately have columns named file/pos); the dv parquet's
     # public (file, pos) schema is applied only at write time below
-    raw = _read_physical(spark, td, rels, mapping)
+    raw = _read_physical(spark, td, rels, body)
     tagged = raw.select(
         F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("__dv_file"),
         F.col("_metadata.row_index").alias("__dv_pos"),
@@ -2129,7 +2210,7 @@ def delete_where_dv(
         # actually points at this object
         live_names = sorted(rel.rsplit("/", 1)[-1] for rel in old_dv)
         prev = (
-            spark.read.parquet(*sorted({f"{td}/{rel}" for rel in old_dv.values()}))
+            _read_dv(spark, td, old_dv.values())
             .select(F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos"))
             .filter(F.col("__dv_file").isin(live_names))
         )
@@ -2206,9 +2287,10 @@ def delete_where_dv(
                 dv_rows=sum(per_file.values()),
                 # a dv only masks rows; the files' z-layout is intact
                 clustered=body.get("clustered"),
+                schema=body.get("schema"),
             )
     finally:
-        backend.delete_file(f"{td}/_claim_v{v:05d}")
+        _release_claim(backend, td, v, writer_id)
     return v
 
 
@@ -2253,9 +2335,10 @@ def restore_version(spark: SparkSession, table_dir: str, to_version: int, backen
                 dv=body.get("dv"),
                 dv_rows=body.get("dv_rows"),
                 clustered=body.get("clustered"),
+                schema=body.get("schema"),
             )
     finally:
-        backend.delete_file(f"{td}/_claim_v{v:05d}")
+        _release_claim(backend, td, v, writer_id)
     return v
 
 
@@ -2347,7 +2430,11 @@ def _mapping_commit(spark, table_dir, backend, mutate) -> int:
     schema when none exists yet), apply ``mutate``, publish a new
     manifest naming the SAME files and stats under the new mapping —
     one conditional PUT, zero data movement, ordinary claim protocol
-    with a base-version conflict check."""
+    with a base-version conflict check. The recorded physical schema
+    carries over, plus each added column's physical name as a nullable
+    field of its declared type."""
+    from pyspark.sql.types import _parse_datatype_string
+
     backend = backend or _backend_for(table_dir, spark)
     td = table_dir.rstrip("/")
     base = latest_version(table_dir, backend)
@@ -2360,6 +2447,7 @@ def _mapping_commit(spark, table_dir, backend, mutate) -> int:
             "is a plain withColumnRenamed + write_version)"
         )
     body = _manifest_body(table_dir, base, backend)
+    schema = _manifest_schema(body)
     cols = body.get("columns")
     if cols is None:
         first = next(
@@ -2367,11 +2455,18 @@ def _mapping_commit(spark, table_dir, backend, mutate) -> int:
         )
         if first is None:
             raise FileNotFoundError(f"manifest v{base} names no files in {table_dir}")
-        names = spark.read.parquet(f"{td}/{first}").columns
+        if schema is not None:
+            names = schema.fieldNames()
+        else:
+            names = spark.read.parquet(f"{td}/{first}").columns
         cols = [
             {"id": i + 1, "name": n, "physical": n} for i, n in enumerate(names)
         ]
     new_cols = mutate([dict(c) for c in cols])
+    if schema is not None:
+        for c in new_cols:
+            if "type" in c and c["physical"] not in schema.fieldNames():
+                schema.add(c["physical"], _as_nullable(_parse_datatype_string(c["type"])), True)
     # the clustered mark is keyed by LOGICAL names: translate it
     # through the mutation by stable field id so a rename of a
     # clustering column keeps the mark valid (the physical z-layout is
@@ -2406,9 +2501,10 @@ def _mapping_commit(spark, table_dir, backend, mutate) -> int:
                 dv=body.get("dv"),
                 dv_rows=body.get("dv_rows"),
                 clustered=clustered,
+                schema=schema.json() if schema is not None else None,
             )
     finally:
-        backend.delete_file(f"{td}/_claim_v{v:05d}")
+        _release_claim(backend, td, v, writer_id)
     return v
 
 
@@ -2579,27 +2675,26 @@ def change_feed(
             rel for rel in (fo & fn) if dv_o.get(rel) != dv_n.get(rel)
         }
 
-        def _side(body, dv_map, rels_all, dv_rows):
+        def _side(body, rels_all):
             rels = sorted(rels_all & changed)
             cols = body.get("columns")
             if not rels:
                 # no changed files on this side: an EMPTY frame with
                 # the side's logical schema. ONE sample file suffices
-                # for the schema (the mapping NULL-backfills added
-                # columns a single file may lack) — planning over all
-                # N files would re-introduce the O(N) footer-listing
-                # this pruning exists to avoid; filter-false then
-                # prunes the scan itself to nothing at runtime.
+                # (the recorded schema, or the mapping's NULL-backfill
+                # on older manifests, covers added columns a single
+                # file may lack) — planning over all N files would
+                # re-introduce the O(N) footer-listing this pruning
+                # exists to avoid; filter-false then prunes the scan
+                # itself to nothing at runtime.
                 sample = sorted(rels_all)[:1] or sorted(fo | fn)[:1]
-                full = _read_physical(spark, td, sample, cols)
+                full = _read_physical(spark, td, sample, body)
                 return _to_logical(full, cols).filter(F.lit(False))
-            live = _live_tagged(spark, td, rels, dv_map, dv_rows, cols).drop(
-                "__file", "__pos"
-            )
+            live = _live_tagged(spark, td, rels, body).drop("__file", "__pos")
             return _to_logical(live, cols)
 
-        old = _side(body_o, dv_o, fo, body_o.get("dv_rows"))
-        new = _side(body_n, dv_n, fn, body_n.get("dv_rows"))
+        old = _side(body_o, fo)
+        new = _side(body_n, fn)
     else:
         old = read_table(spark, table_dir, from_version, backend=backend)
         new = read_table(spark, table_dir, to_version, backend=backend)
@@ -2860,9 +2955,7 @@ def cluster_version(
     pending = [rel for rel in body["files"] if rel not in done]
     if not pending:
         return base
-    live = _live_tagged(
-        spark, td, pending, dv_map, body.get("dv_rows"), mapping
-    ).drop("__file", "__pos")
+    live = _live_tagged(spark, td, pending, body).drop("__file", "__pos")
     rows = _to_logical(live, mapping)
     out = (
         _zorder_value(rows, list(cluster_by))
@@ -2876,7 +2969,8 @@ def cluster_version(
     staging = f"{td}/{_DATA_PREFIX}/{writer_id}"
     backend.makedirs(staging)
     with _Lease(backend, f"{staging}/_lease", writer_id):
-        _to_physical(out, mapping).write.mode("append").parquet(staging)
+        written = _to_physical(out, mapping)
+        written.write.mode("append").parquet(staging)
         new_files = sorted(
             n for n in backend.list_names(staging) if n.endswith(".parquet")
         )
@@ -2900,9 +2994,10 @@ def cluster_version(
                 dv=carried_dv or None,
                 dv_rows=body.get("dv_rows") if carried_dv else None,
                 clustered={"cols": list(cluster_by), "files": carried + new_rels},
+                schema=_schema_json(written, body, carried),
             )
     finally:
-        backend.delete_file(f"{td}/_claim_v{v:05d}")
+        _release_claim(backend, td, v, writer_id)
     return v
 
 

@@ -8,11 +8,15 @@ with identical instants."""
 from __future__ import annotations
 
 import datetime
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from pyspark.sql.types import LongType, TimestampNTZType
+
+from fp_data_lakehouse_spark.sources import catalog
 from fp_data_lakehouse_spark.sources.catalog import load_table
 
 _EPOCHS_US = [1_700_000_000_000_000, 1_700_000_123_456_789, 1_700_003_600_000_000]
@@ -69,3 +73,44 @@ def test_orders_ntz_orderdate_normalized(spark, tmp_path):
     df = load_table(spark, str(tmp_path), "orders")
     assert dict(df.dtypes)["o_orderdate"] == "timestamp"
     assert df.selectExpr("unix_timestamp(o_orderdate) AS ep").collect()[0].ep == 820540800
+
+
+def test_load_table_reinfers_a_fixture_replaced_in_place(spark, tmp_path):
+    """The cached schema serves a fixture only while its files are
+    unchanged: a repeat load runs no inference job, and the same path
+    rewritten with another ts encoding is inferred again."""
+    from tests.test_versioned import _jobs_during
+
+    d = _write_events(str(tmp_path), pa.array([e * 1000 for e in _EPOCHS_US], pa.int64()))
+    load_table(spark, d, "events")
+    df, jobs = _jobs_during(spark, lambda: load_table(spark, d, "events"))
+    assert jobs == 0
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    path = f"{d}/events.parquet"
+    mtime = os.stat(path).st_mtime_ns
+    _write_events(d, pa.array(_EPOCHS_US, pa.timestamp("us")))
+    os.utime(path, ns=(mtime + 10**9, mtime + 10**9))
+    assert catalog._fixture_schema(spark, path)["ts"].dataType == TimestampNTZType()
+    df = load_table(spark, d, "events")
+    got = sorted(r.ep for r in df.selectExpr("unix_micros(ts) AS ep").collect())
+    assert got == sorted(_EPOCHS_US)
+
+
+def test_fixture_schema_cache_is_keyed_by_inference_confs(spark, tmp_path):
+    """Flipping ``nanosAsLong`` changes what inference makes of a
+    TIMESTAMP(NANOS) column, so the cached type is not reused: with the
+    conf off the reader refuses the column outright."""
+    d = _write_events(str(tmp_path), pa.array([e * 1000 for e in _EPOCHS_US], pa.timestamp("ns")))
+    path = f"{d}/events.parquet"
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        assert catalog._fixture_schema(spark, path)["ts"].dataType == LongType()
+        spark.conf.set(key, "false")
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            catalog._fixture_schema(spark, path)
+        spark.conf.set(key, "true")
+        assert catalog._fixture_schema(spark, path)["ts"].dataType == LongType()
+    finally:
+        spark.conf.set(key, before)

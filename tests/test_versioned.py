@@ -2291,3 +2291,203 @@ def test_skip_filters_shape_validated_on_vdir_versions(spark, tdir):
     # well-formed hints on a v-dir version are accepted (no stats
     # travel with a copy publish, so they prune nothing)
     assert read_table(spark, tdir, skip_filters=[("id", "le", 3)]).count() == 10
+
+
+# ---------------------------------------------------------------------------
+# recorded schemas: every manifest commit records the physical Spark
+# schema, and reads plan from it without a footer-inference job
+# ---------------------------------------------------------------------------
+
+import json  # noqa: E402
+
+from fp_data_lakehouse_spark.sources import versioned as vt  # noqa: E402
+
+
+def _jobs_during(spark, fn):
+    """Spark jobs submitted while ``fn`` runs, counted through a job
+    group. A job in a second group acts as a barrier: status events are
+    delivered in order, so once it is visible every earlier job is."""
+    sc = spark.sparkContext
+    gid = f"count-{os.getpid()}-{id(fn)}"
+    sc.setJobGroup(gid, "jobs during build")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(gid + "-barrier", "barrier")
+        spark.range(1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    for _ in range(200):
+        if tracker.getJobIdsForGroup(gid + "-barrier"):
+            break
+        time.sleep(0.01)
+    return out, len(tracker.getJobIdsForGroup(gid))
+
+
+def _fallback_schema(spark, td, body):
+    """What a read of this version infers when its manifest records no
+    schema: the footer schema, merged and NULL-backfilled for added
+    columns."""
+    legacy = {k: val for k, val in body.items() if k != "schema"}
+    return vt._read_physical(spark, td, body["files"], legacy).schema
+
+
+def test_recorded_schema_matches_inference_on_every_commit_path(spark, tmp_path):
+    """Each manifest-writing path records the schema a footer inference
+    returns for its version — nested types and non-null source columns
+    included (parquet reads everything back as nullable)."""
+    from pyspark.sql import functions as F
+
+    td = str(tmp_path / "t")
+    df = spark.range(60).selectExpr(
+        "id AS k",
+        "id * 2 AS v",
+        "CAST(id AS STRING) AS s",
+        "array(id) AS arr",
+        "named_struct('a', id, 'b', array(id)) AS st",
+        "map('x', id) AS m",
+        "timestamp_seconds(id) AS ts",
+    )
+    backend = vt._backend_for(td)
+    made = [vt.write_version(df.repartitionByRange(4, "k"), td, manifest=True)]
+    upd = spark.range(55, 65).selectExpr(
+        "id AS k", "id * 7 AS v", "'u' AS s", "array(id) AS arr",
+        "named_struct('a', id, 'b', array(id)) AS st", "map('y', id) AS m",
+        "timestamp_seconds(id) AS ts",
+    )
+    made.append(vt.merge_into_version_cow(spark, td, upd, ["k"]))
+    made.append(vt.delete_where_cow(spark, td, F.col("k") < 5))
+    made.append(vt.delete_where_dv(spark, td, F.col("k") == 30))
+    made.append(vt.compact_version(spark, td, 2, manifest=True))
+    made.append(vt.merge_into_version_cow(spark, td, upd.limit(1), ["k"]))
+    made.append(vt.cluster_version(spark, td, 2, ["k"]))
+    made.append(vt.restore_version(spark, td, made[0]))
+    made.append(vt.rename_column(spark, td, "s", "s2"))
+    made.append(vt.drop_column(spark, td, "arr"))
+    made.append(vt.add_column(spark, td, "score", "double"))
+    late = spark.createDataFrame(
+        [(1000, 1, "n", (1000, [1000]), {"z": 1}, None, 2.5)],
+        "k long, v long, s2 string, st struct<a:long,b:array<long>>, "
+        "m map<string,long>, ts timestamp, score double",
+    )
+    made.append(vt.merge_into_version_cow(spark, td, late, ["k"]))
+    assert made == list(range(1, len(made) + 1))
+    for v in made:
+        body = vt._manifest_body(td, v, backend)
+        assert "schema" in body, f"v{v} records no schema"
+        recorded = vt._manifest_schema(body)
+        inferred = _fallback_schema(spark, td, body)
+        if body.get("columns"):
+            # a footer merge over files of two shapes (a CoW rewrite
+            # after DROP COLUMN) orders fields by file listing; readers
+            # select mapped columns by name
+            recorded = sorted(recorded.fields, key=lambda f: f.name)
+            inferred = sorted(inferred.fields, key=lambda f: f.name)
+        assert recorded == inferred, f"v{v}"
+
+
+def test_read_table_builds_without_jobs(spark, tmp_path):
+    """Building a read of a manifest head, a deletion-vector version and
+    an added-column version submits no Spark job: the scan is planned
+    from the recorded schema (the dv parquet from its fixed one)."""
+    from pyspark.sql import functions as F
+
+    td = str(tmp_path / "t")
+    vt.write_version(
+        spark.range(40).selectExpr("id AS k", "id * 2 AS v").repartition(2), td, manifest=True
+    )
+    vt.delete_where_dv(spark, td, F.col("k") == 3)
+    vt.add_column(spark, td, "score", "double")
+    for v in (1, 2, 3):
+        df, jobs = _jobs_during(spark, lambda v=v: vt.read_table(spark, td, version=v))
+        assert jobs == 0, f"building v{v} ran {jobs} job(s)"
+        assert df.count() == (40 if v == 1 else 39)
+    df = vt.read_table(spark, td)
+    assert df.columns == ["k", "v", "score"]
+    assert df.filter(F.col("score").isNull()).count() == 39
+    assert df.filter(F.col("k") == 3).count() == 0
+
+
+def test_manifest_without_schema_reads_through_inference(spark, tmp_path):
+    """A manifest written before commits recorded the schema still reads
+    (footer inference, merged for an added column); metadata commits
+    carry the absence forward, and the next rewrite records one."""
+    from pyspark.sql import functions as F
+
+    td = str(tmp_path / "t")
+    vt.write_version(
+        spark.range(20).selectExpr("id AS k", "id * 2 AS v").repartition(2), td, manifest=True
+    )
+    path = f"{td}/_manifest_v00001.json"
+    with open(path) as fh:
+        body = json.load(fh)
+    del body["schema"]
+    with open(path, "w") as fh:
+        json.dump(body, fh)
+    df, jobs = _jobs_during(spark, lambda: vt.read_table(spark, td))
+    assert jobs >= 1  # the inference fallback ran
+    assert sorted(r.k for r in df.collect()) == list(range(20))
+    vt.add_column(spark, td, "score", "double")
+    backend = vt._backend_for(td)
+    assert "schema" not in vt._manifest_body(td, 2, backend)
+    df = vt.read_table(spark, td)
+    assert df.columns == ["k", "v", "score"]
+    assert df.filter(F.col("score").isNull()).count() == 20
+    upd = spark.createDataFrame([(1, 5, 1.5)], "k long, v long, score double")
+    vt.merge_into_version_cow(spark, td, upd, ["k"])
+    assert "schema" in vt._manifest_body(td, 3, backend)
+    got = {(r.k, r.v, r.score) for r in vt.read_table(spark, td).collect()}
+    assert (1, 5, 1.5) in got and (2, 4, None) in got and len(got) == 20
+
+
+def _intruder_backend(inner, td):
+    """Hands the claim to another writer the first time the committing
+    writer checks its ownership — a reclaim after ``_claim_slot``."""
+    fired = []
+
+    class _Backend:
+        def __getattr__(self, name):
+            return getattr(inner, name)
+
+        def read_text(self, p):
+            if "/_claim_v" in p and not fired:
+                fired.append(p)
+                inner.write_text_atomic(p, vt._lease_line("intruder"))
+            return inner.read_text(p)
+
+    return _Backend()
+
+
+def test_write_version_leaves_a_reclaimed_claim_in_place(spark, tdir):
+    """A writer that finds its claim owned by another writer raises and
+    leaves that writer's ``_claim_v*`` marker where it is."""
+    write_version(_df(spark, 3), tdir, manifest=True)
+    inner = _backend_for(tdir, spark)
+    td = tdir.rstrip("/")
+    with pytest.raises(ConcurrentWriteError, match="no longer owned"):
+        write_version(_df(spark, 9), tdir, backend=_intruder_backend(inner, td), manifest=True)
+    assert latest_version(tdir) == 1
+    lease = inner.read_text(f"{td}/_claim_v00002")
+    assert lease is not None and lease.startswith("intruder ")
+
+
+def test_commit_files_leaves_a_reclaimed_claim_in_place(tmp_path, monkeypatch):
+    """The Python DataSource commit (``_commit_files``) releases only a
+    claim it still owns."""
+    d = str(tmp_path / "t")
+    backend = vt.LocalFsBackend()
+    staging = f"{d}/_stream_staging_x"
+    backend.makedirs(staging)
+    real_claim_slot = vt._claim_slot
+
+    def reclaimed(table_dir, backend, base_version, **kw):
+        v = real_claim_slot(table_dir, backend, base_version, **kw)
+        backend.write_text_atomic(f"{table_dir}/_claim_v{v:05d}", vt._lease_line("intruder"))
+        return v
+
+    monkeypatch.setattr(vt, "_claim_slot", reclaimed)
+    with pytest.raises(ConcurrentWriteError, match="no longer owned"):
+        vt._commit_files(d, backend, staging, [], "writer1")
+    assert latest_version(d) is None
+    assert backend.read_text(f"{d}/_claim_v00001").startswith("intruder ")
