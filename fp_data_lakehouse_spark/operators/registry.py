@@ -50,6 +50,7 @@ def register(name: str, oracle: str | None = None) -> Callable[[Builder], Builde
 # driver CORRECTNESS row land inside that window; everything else follows
 # in registration order. Rotate this list each round until every
 # oracle-backed query has appeared green in some CORRECTNESS_r{N}.json.
+# tests/test_oracle_parity.py::test_query_mix_slice_is_pinned pins the query_mix slice.
 DRIVER_PRIORITY: list[str] = [
     # Rotation after rounds 14 and 15, which both certified the same
     # 50-row window. First the three versioned-table certificates left

@@ -145,26 +145,50 @@ class _Lease:
     LIVE writer's marker. A daemon thread rewrites the lease every
     TTL/4; exceptions from the refresh are swallowed (a missed
     heartbeat degrades to the TTL race fsck already tolerates — the
-    operation itself still fails loudly on real IO errors)."""
+    operation itself still fails loudly on real IO errors).
+
+    ``claim=True`` heartbeats a commit-slot claim: ``_claim_slot`` has
+    just written its lease, so entry writes nothing, and each beat
+    renews the lease only while it still names this writer — as a
+    compare-and-swap on backends with ``write_text_cas`` — then stops
+    for good once it names another. A writer whose slot was reclaimed
+    must not take the claim back before the publish's ownership checks
+    run."""
 
     def __init__(self, backend, path: str, writer_id: str,
-                 interval_sec: float = _LEASE_TTL_SEC / 4):
+                 interval_sec: float = _LEASE_TTL_SEC / 4, claim: bool = False):
         self._backend = backend
         self._path = path
         self._writer_id = writer_id
         self._interval = interval_sec
+        self._claim = claim
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
 
+    def _renew(self) -> bool:
+        """Write one heartbeat; False once a claim names another writer."""
+        line = _lease_line(self._writer_id)
+        if not self._claim:
+            self._backend.write_text_atomic(self._path, line)
+            return True
+        cur = self._backend.read_text(self._path)
+        if not _names_writer(cur, self._writer_id):
+            return False
+        cas = getattr(self._backend, "write_text_cas", None)
+        if cas is None:
+            self._backend.write_text_atomic(self._path, line)
+            return True
+        return cas(self._path, line, cur)
+
     def __enter__(self) -> "_Lease":
-        self._backend.write_text_atomic(self._path, _lease_line(self._writer_id))
+        if not self._claim:
+            self._renew()
 
         def _beat() -> None:
             while not self._stop.wait(self._interval):
                 try:
-                    self._backend.write_text_atomic(
-                        self._path, _lease_line(self._writer_id)
-                    )
+                    if not self._renew():
+                        return
                 except Exception:
                     pass
 
@@ -1263,10 +1287,14 @@ def _collect_file_stats(staging: str, files: list[str]) -> dict:
     return out
 
 
+def _names_writer(lease: str | None, writer_id: str) -> bool:
+    """Whether a marker's lease text names ``writer_id``."""
+    return lease is not None and lease.strip().startswith(writer_id + " ")
+
+
 def _owns_claim(backend, td: str, v: int, writer_id: str) -> bool:
     """Whether claim ``v``'s lease still names ``writer_id``."""
-    lease = backend.read_text(f"{td}/_claim_v{v:05d}")
-    return lease is not None and lease.strip().startswith(writer_id + " ")
+    return _names_writer(backend.read_text(f"{td}/_claim_v{v:05d}"), writer_id)
 
 
 def _verify_claim_ownership(backend, td: str, v: int, writer_id: str) -> None:
@@ -1310,8 +1338,7 @@ def _publish(
     clustered: dict | None = None,
     schema: str | None = None,
 ) -> None:
-    """The commit choreography every publish path shares (so a fix to
-    one cannot silently miss the others): verify claim ownership BEFORE
+    """The publish step of :func:`_commit`: verify claim ownership BEFORE
     the data-plane publish (a writer stalled past its lease TTL whose
     slot was reclaimed and recommitted must not clobber the committed
     version's manifest or merge stale objects into its v-dir), then
@@ -1378,6 +1405,52 @@ def _publish(
     _swap_pointer(backend, td, v, v - 1)
     if manifest_files is not None and staging:
         backend.delete_file(f"{staging}/_lease")
+
+
+def _stage(df: DataFrame, backend, staging: str, writer_id: str) -> list[str]:
+    """Write ``df`` as parquet under ``staging`` with its ``_lease``
+    heartbeated, and return the names of the staged files. Commit paths
+    stage BEFORE claiming the slot, so the claim is held only for the
+    metadata-sized publish — concurrent writers wait milliseconds, not
+    a full 100 TB write. mode=append because the fresh staging dir
+    already holds the lease file (underscore-prefixed: invisible to
+    parquet readers)."""
+    backend.makedirs(staging)
+    with _Lease(backend, f"{staging}/_lease", writer_id):
+        df.write.mode("append").parquet(staging)
+        return sorted(n for n in backend.list_names(staging) if n.endswith(".parquet"))
+
+
+def _commit(
+    table_dir: str,
+    backend,
+    base: int | None,
+    writer_id: str,
+    staging: str | None = None,
+    **manifest_fields,
+) -> int:
+    """The one commit every ``versioned`` write path makes (so a fix to
+    one cannot silently miss the others): claim the next slot through
+    ``_claim_slot`` with ``base`` as the read-set check, heartbeat the
+    claim while :func:`_publish` writes the manifest (or moves
+    ``staging`` into the v-dir when no ``manifest_files`` are given) and
+    swaps the pointer, then release the claim if this writer still owns
+    it. A claim that fails with ConcurrentWriteError removes ``staging``,
+    so the aborted commit leaves no staged files. Returns the new
+    version."""
+    td = table_dir.rstrip("/")
+    try:
+        v = _claim_slot(table_dir, backend, base, writer_id=writer_id)
+    except ConcurrentWriteError:
+        if staging is not None:
+            backend.rmtree(staging)
+        raise
+    try:
+        with _Lease(backend, f"{td}/_claim_v{v:05d}", writer_id, claim=True):
+            _publish(backend, td, v, writer_id, staging=staging, **manifest_fields)
+    finally:
+        _release_claim(backend, td, v, writer_id)
+    return v
 
 
 def _commit_files(
@@ -1527,61 +1600,35 @@ def write_version(
     heartbeated through the publish (the per-object COPY loop on
     object-store backends can be long) — so a concurrent TTL-based
     fsck never sweeps a LIVE writer's staging or claim."""
-    import json
-
     backend = backend or _backend_for(table_dir, df.sparkSession)
     backend.makedirs(table_dir)
     td = table_dir.rstrip("/")
     writer_id = uuid.uuid4().hex[:12]
-    # Stage the (possibly slow, possibly huge) parquet write BEFORE
-    # claiming the slot, so the claim is held only for the metadata-
-    # sized publish — concurrent writers wait milliseconds, not a full
-    # 100 TB write. mode=append because the fresh staging dir already
-    # holds the lease file (underscore-prefixed: invisible to parquet
-    # readers). In manifest mode the "staging" dir IS the final data
-    # location — publication never moves a byte.
+    # In manifest mode the "staging" dir IS the final data location —
+    # publication never moves a byte.
     staging = (
         f"{td}/{_DATA_PREFIX}/{writer_id}" if manifest else f"{td}/_staging_{writer_id}"
     )
-    backend.makedirs(staging)
-    with _Lease(backend, f"{staging}/_lease", writer_id):
-        df.write.mode("append").parquet(staging)
-        if manifest:
-            # footer-only stats pass (min/max per file per primitive
-            # column — the data-skipping index readers prune files by);
-            # runs BEFORE the claim like the data write itself, so the
-            # claim window stays metadata-sized
-            files = sorted(
-                n for n in backend.list_names(staging) if n.endswith(".parquet")
-            )
-            stats = _collect_file_stats(staging, files)
-    try:
-        v = _claim_slot(table_dir, backend, base_version, writer_id=writer_id)
-    except ConcurrentWriteError:
-        backend.rmtree(staging)
-        raise
-    try:
-        with _Lease(backend, f"{td}/_claim_v{v:05d}", writer_id):
-            if manifest:
-                mfiles = [f"{_DATA_PREFIX}/{writer_id}/{n}" for n in files]
-                _publish(
-                    backend, td, v, writer_id,
-                    manifest_files=mfiles,
-                    stats=stats,
-                    staging=staging,
-                    # clustered_cols: the CALLER z-ordered df on these
-                    # columns (compact_version/cluster_version) — mark
-                    # every staged file for incremental clustering
-                    clustered={"cols": list(clustered_cols), "files": mfiles}
-                    if clustered_cols
-                    else None,
-                    schema=_schema_json(df),
-                )
-            else:
-                _publish(backend, td, v, writer_id, staging=staging)
-    finally:
-        _release_claim(backend, td, v, writer_id)
-    return v
+    files = _stage(df, backend, staging, writer_id)
+    if not manifest:
+        return _commit(table_dir, backend, base_version, writer_id, staging)
+    mfiles = [f"{_DATA_PREFIX}/{writer_id}/{n}" for n in files]
+    return _commit(
+        table_dir, backend, base_version, writer_id, staging,
+        manifest_files=mfiles,
+        # footer-only stats pass (min/max per file per primitive column
+        # — the data-skipping index readers prune files by); runs BEFORE
+        # the claim like the data write itself, so the claim window
+        # stays metadata-sized
+        stats=_collect_file_stats(staging, files),
+        # clustered_cols: the CALLER z-ordered df on these columns
+        # (compact_version/cluster_version) — mark every staged file for
+        # incremental clustering
+        clustered={"cols": list(clustered_cols), "files": mfiles}
+        if clustered_cols
+        else None,
+        schema=_schema_json(df),
+    )
 
 
 def read_table(
@@ -1794,6 +1841,59 @@ def _live_tagged(spark, td: str, rels: list[str], body: dict) -> DataFrame:
     return tagged
 
 
+def _rewrite_files(
+    spark: SparkSession,
+    td: str,
+    backend,
+    base: int,
+    body: dict,
+    rels: list[str],
+    transform,
+    cluster_by: list[str] | None = None,
+) -> int:
+    """The copy-on-write commit over manifest ``body`` (version
+    ``base``): the live rows of the files ``rels`` (dv positions
+    masked, logical names) go through ``transform`` and are staged as
+    new files under their PHYSICAL names, byte-compatible with the
+    files carried by reference; every other file of the head carries
+    with its stats and deletion-vector entry. With no ``rels`` (a pure
+    insert), ``transform`` gets an empty head-shaped frame, so new
+    files keep the head's column order. ``cluster_by`` marks carried
+    and new files as clustered under those columns; otherwise only the
+    carried files keep the head's mark. Commits with ``base`` as the
+    read-set check and returns the new version."""
+    mapping = body.get("columns")
+    rel_set = set(rels)
+    carried = [rel for rel in body["files"] if rel not in rel_set]
+    dv_map = body.get("dv") or {}
+    carried_dv = {rel: dv_map[rel] for rel in carried if rel in dv_map}
+    if rels:
+        live = _live_tagged(spark, td, rels, body).drop("__file", "__pos")
+    else:
+        live = _read_physical(spark, td, body["files"][:1], body).filter(F.lit(False))
+    written = _to_physical(transform(_to_logical(live, mapping)), mapping)
+    writer_id = uuid.uuid4().hex[:12]
+    staging = f"{td}/{_DATA_PREFIX}/{writer_id}"
+    new_files = _stage(written, backend, staging, writer_id)
+    stats = _carried_stats(body.get("stats", {}), carried)
+    stats.update(_collect_file_stats(staging, new_files))
+    new_rels = [f"{_DATA_PREFIX}/{writer_id}/{n}" for n in new_files]
+    return _commit(
+        td, backend, base, writer_id, staging,
+        manifest_files=carried + new_rels,
+        stats=stats,
+        columns=mapping,
+        dv=carried_dv or None,
+        # the head's total is a sound UPPER bound for the carried
+        # subset — never under-gates the broadcast
+        dv_rows=body.get("dv_rows") if carried_dv else None,
+        clustered={"cols": list(cluster_by), "files": carried + new_rels}
+        if cluster_by
+        else _carried_clustered(body, carried),
+        schema=_schema_json(written, body, carried),
+    )
+
+
 def delete_where_cow(
     spark: SparkSession, table_dir: str, condition, backend=None
 ) -> int:
@@ -1815,8 +1915,6 @@ def delete_where_cow(
     ``base_version`` read-set check; vacuum's reference-counted GC
     already understands the sharing (shared files survive the old
     version's expiry)."""
-    import json
-
     backend = backend or _backend_for(table_dir, spark)
     td = table_dir.rstrip("/")
     base = latest_version(table_dir, backend)
@@ -1829,15 +1927,12 @@ def delete_where_cow(
         )
     head_body = _manifest_body(table_dir, base, backend)
     rels = head_body["files"]
-    old_stats = head_body.get("stats", {})
     mapping = head_body.get("columns")
-    dv_map = head_body.get("dv") or {}
 
     # ``condition`` is LOGICAL and evaluated over LIVE rows only (dv
     # positions already masked — a dv'd head composes with CoW: hit
     # files are rewritten from their live rows, so the rewrite both
     # applies the old dv physically and sheds the newly deleted rows)
-    head_dv_rows = head_body.get("dv_rows")
     live = _live_tagged(spark, td, rels, head_body)
     probe = live
     if mapping:
@@ -1848,54 +1943,12 @@ def delete_where_cow(
         r[0]
         for r in probe.filter(condition).select("__file").distinct().collect()
     }  # metadata-scale: one row per AFFECTED file, never per data row
-    hit_rels = {rel for rel in rels if rel.rsplit("/", 1)[-1] in hit_names}
+    hit_rels = sorted(rel for rel in rels if rel.rsplit("/", 1)[-1] in hit_names)
     if not hit_rels:
         return base
-    carried = [rel for rel in rels if rel not in hit_rels]
-    carried_dv = {rel: dv_map[rel] for rel in carried if rel in dv_map}
-
-    writer_id = uuid.uuid4().hex[:12]
-    staging = f"{td}/{_DATA_PREFIX}/{writer_id}"
-    backend.makedirs(staging)
-    with _Lease(backend, f"{staging}/_lease", writer_id):
-        hit_live = _live_tagged(spark, td, sorted(hit_rels), head_body).drop(
-            "__file", "__pos"
-        )
-        survivors = _to_logical(hit_live, mapping).filter(~condition)
-        # rewrites keep PHYSICAL names so they stay byte-compatible
-        # with the files carried by reference
-        written = _to_physical(survivors, mapping)
-        written.write.mode("append").parquet(staging)
-        new_files = sorted(
-            n for n in backend.list_names(staging) if n.endswith(".parquet")
-        )
-        new_stats = _collect_file_stats(staging, new_files)
-    try:
-        v = _claim_slot(table_dir, backend, base, writer_id=writer_id)
-    except ConcurrentWriteError:
-        backend.rmtree(staging)
-        raise
-    try:
-        with _Lease(backend, f"{td}/_claim_v{v:05d}", writer_id):
-            stats = _carried_stats(old_stats, carried)
-            stats.update(new_stats)
-            _publish(
-                backend, td, v, writer_id,
-                manifest_files=carried
-                + [f"{_DATA_PREFIX}/{writer_id}/{n}" for n in new_files],
-                stats=stats,
-                staging=staging,
-                columns=mapping,
-                dv=carried_dv or None,
-                # the head's total is a sound UPPER bound for the
-                # carried subset — never under-gates the broadcast
-                dv_rows=head_dv_rows if carried_dv else None,
-                clustered=_carried_clustered(head_body, carried),
-                schema=_schema_json(written, head_body, carried),
-            )
-    finally:
-        _release_claim(backend, td, v, writer_id)
-    return v
+    return _rewrite_files(
+        spark, td, backend, base, head_body, hit_rels, lambda rows: rows.filter(~condition)
+    )
 
 
 def merge_into_version_cow(
@@ -1914,8 +1967,6 @@ def merge_into_version_cow(
     an empty table is a plain manifest initial load. Same uniqueness
     precondition and base_version conflict semantics as
     :func:`merge_into_version`."""
-    import json
-
     backend = backend or _backend_for(table_dir, spark)
     td = table_dir.rstrip("/")
     dup = updates.groupBy(*keys).count().filter("count > 1").limit(1).count()
@@ -1930,9 +1981,7 @@ def merge_into_version_cow(
         )
     head_body = _manifest_body(table_dir, base, backend)
     rels = head_body["files"]
-    old_stats = head_body.get("stats", {})
     mapping = head_body.get("columns")
-    dv_map = head_body.get("dv") or {}
     if mapping:
         logical = {c["name"] for c in mapping}
         extra = set(updates.columns) - logical
@@ -1948,7 +1997,6 @@ def merge_into_version_cow(
     # LIVE rows only (dv positions masked): a key matched solely by a
     # dv-deleted row must not force that file's rewrite, and hit-file
     # rewrites re-stage live rows — applying the old dv physically
-    head_dv_rows = head_body.get("dv_rows")
     live = _live_tagged(spark, td, rels, head_body)
     if mapping:
         phys = {c["name"]: c["physical"] for c in mapping}
@@ -1964,55 +2012,11 @@ def merge_into_version_cow(
         .distinct()
         .collect()
     }  # one row per file containing a matched LIVE key
-    hit_rels = {rel for rel in rels if rel.rsplit("/", 1)[-1] in hit_names}
-    carried = [rel for rel in rels if rel not in hit_rels]
-    carried_dv = {rel: dv_map[rel] for rel in carried if rel in dv_map}
-
-    writer_id = uuid.uuid4().hex[:12]
-    staging = f"{td}/{_DATA_PREFIX}/{writer_id}"
-    backend.makedirs(staging)
-    with _Lease(backend, f"{staging}/_lease", writer_id):
-        if hit_rels:
-            hit_live = _live_tagged(spark, td, sorted(hit_rels), head_body)
-        else:
-            # pure insert: no file is rewritten, but the empty head-
-            # shaped side keeps the new files in the head's column order
-            hit_live = live.filter(F.lit(False))
-        hit_rows = _to_logical(hit_live.drop("__file", "__pos"), mapping)
-        survivors = hit_rows.join(upd_keys, keys, "left_anti")
-        staged = survivors.unionByName(updates)
-        # rewrites + inserts keep PHYSICAL names, byte-compatible with
-        # the carried files
-        written = _to_physical(staged, mapping)
-        written.write.mode("append").parquet(staging)
-        new_files = sorted(
-            n for n in backend.list_names(staging) if n.endswith(".parquet")
-        )
-        new_stats = _collect_file_stats(staging, new_files)
-    try:
-        v = _claim_slot(table_dir, backend, base, writer_id=writer_id)
-    except ConcurrentWriteError:
-        backend.rmtree(staging)
-        raise
-    try:
-        with _Lease(backend, f"{td}/_claim_v{v:05d}", writer_id):
-            stats = _carried_stats(old_stats, carried)
-            stats.update(new_stats)
-            _publish(
-                backend, td, v, writer_id,
-                manifest_files=carried
-                + [f"{_DATA_PREFIX}/{writer_id}/{n}" for n in new_files],
-                stats=stats,
-                staging=staging,
-                columns=mapping,
-                dv=carried_dv or None,
-                dv_rows=head_dv_rows if carried_dv else None,
-                clustered=_carried_clustered(head_body, carried),
-                schema=_schema_json(written, head_body, carried),
-            )
-    finally:
-        _release_claim(backend, td, v, writer_id)
-    return v
+    hit_rels = sorted(rel for rel in rels if rel.rsplit("/", 1)[-1] in hit_names)
+    return _rewrite_files(
+        spark, td, backend, base, head_body, hit_rels,
+        lambda rows: rows.join(upd_keys, keys, "left_anti").unionByName(updates),
+    )
 
 
 _SYMLINK_DIR = "_symlink_format_manifest"
@@ -2253,45 +2257,26 @@ def delete_where_dv(
 
     writer_id = uuid.uuid4().hex[:12]
     staging = f"{td}/{_DATA_PREFIX}/{writer_id}"
-    backend.makedirs(staging)
-    with _Lease(backend, f"{staging}/_lease", writer_id):
-        # repartition(1), NOT coalesce(1): coalesce would pull the
-        # whole matching-row SCAN into a single task (at 100 TB the
-        # delete's full-table filter would run single-threaded);
-        # repartition keeps the scan parallel and shuffles only the
-        # tiny (file, pos) mask rows to the one writer task
-        all_dead.repartition(1).write.mode("append").parquet(staging)
-        dv_files = sorted(
-            n for n in backend.list_names(staging) if n.endswith(".parquet")
-        )
+    # repartition(1), NOT coalesce(1): coalesce would pull the whole
+    # matching-row SCAN into a single task (at 100 TB the delete's
+    # full-table filter would run single-threaded); repartition keeps
+    # the scan parallel and shuffles only the tiny (file, pos) mask
+    # rows to the one writer task
+    dv_files = _stage(all_dead.repartition(1), backend, staging, writer_id)
     dv_rel = f"{_DATA_PREFIX}/{writer_id}/{dv_files[0]}"
-    dv_map = {
-        name_to_rel[f]: dv_rel for f in per_file if f in name_to_rel
-    }
-    try:
-        v = _claim_slot(table_dir, backend, base, writer_id=writer_id)
-    except ConcurrentWriteError:
-        backend.rmtree(staging)
-        raise
-    try:
-        with _Lease(backend, f"{td}/_claim_v{v:05d}", writer_id):
-            _publish(
-                backend, td, v, writer_id,
-                manifest_files=rels,  # ZERO data movement
-                stats=stats,
-                staging=staging,
-                columns=mapping,
-                dv=dv_map,
-                # exact total of (file, pos) pairs in the new dv
-                # object, counted above — the reader's broadcast gate
-                dv_rows=sum(per_file.values()),
-                # a dv only masks rows; the files' z-layout is intact
-                clustered=body.get("clustered"),
-                schema=body.get("schema"),
-            )
-    finally:
-        _release_claim(backend, td, v, writer_id)
-    return v
+    return _commit(
+        table_dir, backend, base, writer_id, staging,
+        manifest_files=rels,  # ZERO data movement
+        stats=stats,
+        columns=mapping,
+        dv={name_to_rel[f]: dv_rel for f in per_file if f in name_to_rel},
+        # exact total of (file, pos) pairs in the new dv object, counted
+        # above — the reader's broadcast gate
+        dv_rows=sum(per_file.values()),
+        # a dv only masks rows; the files' z-layout is intact
+        clustered=body.get("clustered"),
+        schema=body.get("schema"),
+    )
 
 
 def restore_version(spark: SparkSession, table_dir: str, to_version: int, backend=None) -> int:
@@ -2308,7 +2293,6 @@ def restore_version(spark: SparkSession, table_dir: str, to_version: int, backen
     restore via ``write_version(read_table(..., version=N), ...)``.
     Returns the new version."""
     backend = backend or _backend_for(table_dir, spark)
-    td = table_dir.rstrip("/")
     head = latest_version(table_dir, backend)
     if head is None:
         raise FileNotFoundError(f"no committed version in {table_dir}")
@@ -2323,23 +2307,16 @@ def restore_version(spark: SparkSession, table_dir: str, to_version: int, backen
             "write_version(read_table(..., version=N), ...) instead"
         )
     body = _manifest_body(table_dir, to_version, backend)
-    writer_id = uuid.uuid4().hex[:12]
-    v = _claim_slot(table_dir, backend, head, writer_id=writer_id)
-    try:
-        with _Lease(backend, f"{td}/_claim_v{v:05d}", writer_id):
-            _publish(
-                backend, td, v, writer_id,
-                manifest_files=body["files"],
-                stats=body.get("stats", {}),
-                columns=body.get("columns"),
-                dv=body.get("dv"),
-                dv_rows=body.get("dv_rows"),
-                clustered=body.get("clustered"),
-                schema=body.get("schema"),
-            )
-    finally:
-        _release_claim(backend, td, v, writer_id)
-    return v
+    return _commit(
+        table_dir, backend, head, uuid.uuid4().hex[:12],
+        manifest_files=body["files"],
+        stats=body.get("stats", {}),
+        columns=body.get("columns"),
+        dv=body.get("dv"),
+        dv_rows=body.get("dv_rows"),
+        clustered=body.get("clustered"),
+        schema=body.get("schema"),
+    )
 
 
 def version_as_of_timestamp(table_dir: str, ts, backend=None) -> int:
@@ -2486,26 +2463,19 @@ def _mapping_commit(spark, table_dir, backend, mutate) -> int:
             }
         except KeyError:
             clustered = None
-    writer_id = uuid.uuid4().hex[:12]
-    v = _claim_slot(table_dir, backend, base, writer_id=writer_id)
-    try:
-        with _Lease(backend, f"{td}/_claim_v{v:05d}", writer_id):
-            _publish(
-                backend, td, v, writer_id,
-                manifest_files=body["files"],
-                stats=body.get("stats", {}),
-                columns=new_cols,
-                # the head's deletion vectors MUST carry: dropping them
-                # here would silently resurrect dv-deleted rows on a
-                # metadata-only schema commit
-                dv=body.get("dv"),
-                dv_rows=body.get("dv_rows"),
-                clustered=clustered,
-                schema=schema.json() if schema is not None else None,
-            )
-    finally:
-        _release_claim(backend, td, v, writer_id)
-    return v
+    return _commit(
+        table_dir, backend, base, uuid.uuid4().hex[:12],
+        manifest_files=body["files"],
+        stats=body.get("stats", {}),
+        columns=new_cols,
+        # the head's deletion vectors MUST carry: dropping them here
+        # would silently resurrect dv-deleted rows on a metadata-only
+        # schema commit
+        dv=body.get("dv"),
+        dv_rows=body.get("dv_rows"),
+        clustered=clustered,
+        schema=schema.json() if schema is not None else None,
+    )
 
 
 def rename_column(
@@ -2944,8 +2914,6 @@ def cluster_version(
     if base not in _manifest_versions(table_dir, backend):
         raise ValueError("cluster_version requires a manifest-published head")
     body = _manifest_body(table_dir, base, backend)
-    mapping = body.get("columns")
-    dv_map = body.get("dv") or {}
     cmeta = body.get("clustered")
     done = (
         set(cmeta.get("files", ()))
@@ -2955,50 +2923,14 @@ def cluster_version(
     pending = [rel for rel in body["files"] if rel not in done]
     if not pending:
         return base
-    live = _live_tagged(spark, td, pending, body).drop("__file", "__pos")
-    rows = _to_logical(live, mapping)
-    out = (
-        _zorder_value(rows, list(cluster_by))
+    return _rewrite_files(
+        spark, td, backend, base, body, pending,
+        lambda rows: _zorder_value(rows, list(cluster_by))
         .repartitionByRange(max(1, target_files), "__z")
         .sortWithinPartitions("__z")
-        .drop("__z")
+        .drop("__z"),
+        cluster_by=cluster_by,
     )
-    carried = [rel for rel in body["files"] if rel in done]
-    carried_dv = {rel: dv_map[rel] for rel in carried if rel in dv_map}
-    writer_id = uuid.uuid4().hex[:12]
-    staging = f"{td}/{_DATA_PREFIX}/{writer_id}"
-    backend.makedirs(staging)
-    with _Lease(backend, f"{staging}/_lease", writer_id):
-        written = _to_physical(out, mapping)
-        written.write.mode("append").parquet(staging)
-        new_files = sorted(
-            n for n in backend.list_names(staging) if n.endswith(".parquet")
-        )
-        new_stats = _collect_file_stats(staging, new_files)
-    try:
-        v = _claim_slot(table_dir, backend, base, writer_id=writer_id)
-    except ConcurrentWriteError:
-        backend.rmtree(staging)
-        raise
-    try:
-        with _Lease(backend, f"{td}/_claim_v{v:05d}", writer_id):
-            stats = _carried_stats(body.get("stats", {}), carried)
-            stats.update(new_stats)
-            new_rels = [f"{_DATA_PREFIX}/{writer_id}/{n}" for n in new_files]
-            _publish(
-                backend, td, v, writer_id,
-                manifest_files=carried + new_rels,
-                stats=stats,
-                staging=staging,
-                columns=mapping,
-                dv=carried_dv or None,
-                dv_rows=body.get("dv_rows") if carried_dv else None,
-                clustered={"cols": list(cluster_by), "files": carried + new_rels},
-                schema=_schema_json(written, body, carried),
-            )
-    finally:
-        _release_claim(backend, td, v, writer_id)
-    return v
 
 
 def data_file_count(table_dir: str, version: int, backend=None) -> int:

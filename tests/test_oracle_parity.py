@@ -3,6 +3,8 @@ scale factor — the local mirror of the driver's CORRECTNESS gate."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from fp_data_lakehouse_spark.operators import REGISTRY
@@ -120,6 +122,34 @@ def test_driver_priority_window():
     # and the priority names must all actually exist in the registry
     unknown = [n for n in DRIVER_PRIORITY if n not in e.queries()]
     assert not unknown, f"stale DRIVER_PRIORITY entries: {unknown}"
+
+
+def test_query_mix_slice_is_pinned(monkeypatch):
+    """The benchmark's query_mix workload times every fifth q/ev query
+    in ``oracle_sql()`` order, and DRIVER_PRIORITY rewrites that order.
+    A rotation that moves q/ev entries changes what the benchmark
+    measures; this pins the slice, so such a rotation fails here."""
+    import __spark_entry__ as e
+
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(os.path.dirname(__file__)), "lakebench"))
+    from workloads.query_mix import query_names
+
+    assert query_names(e.oracle_sql()) == [
+        "ev08_error_click_proximity",
+        "ev25_touch_attribution",
+        "q01_avg_customer_revenue",
+        "q06_weighted_value_by_orderstatus",
+        "q10b_returned_then_reordered",
+        "q15_returned_vs_kept_per_part",
+        "q20_min_discount_per_customer",
+        "q25_count_customers_ending_small",
+        "q29_biggest_monthly_drop",
+        "q34_balance_quartiles",
+        "q39_grouping_sets_revenue",
+        "ev03_top_events_per_type_day",
+        "ev11_weekly_retention",
+        "ev16_time_to_conversion",
+    ]
 
 
 def test_queries_janitor_releases_session_state(spark):

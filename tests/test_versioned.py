@@ -2491,3 +2491,109 @@ def test_commit_files_leaves_a_reclaimed_claim_in_place(tmp_path, monkeypatch):
         vt._commit_files(d, backend, staging, [], "writer1")
     assert latest_version(d) is None
     assert backend.read_text(f"{d}/_claim_v00001").startswith("intruder ")
+
+
+# ---------------------------------------------------------------------------
+# every commit path: a stale base aborts cleanly, and a claim handed to
+# another writer stays with that writer
+# ---------------------------------------------------------------------------
+
+
+from pyspark.sql import functions as F  # noqa: E402
+
+# each commits onto the two-version manifest table _head_table builds
+# (head v2), passing its backend through
+_COMMIT_PATHS = {
+    "write_version_manifest": lambda spark, td, b: vt.write_version(
+        spark.range(5).selectExpr("id AS k", "id AS v"), td, b, base_version=2, manifest=True
+    ),
+    "write_version_copy": lambda spark, td, b: vt.write_version(
+        spark.range(5).selectExpr("id AS k", "id AS v"), td, b, base_version=2
+    ),
+    "delete_where_cow": lambda spark, td, b: vt.delete_where_cow(
+        spark, td, F.col("k") < 3, backend=b
+    ),
+    "merge_into_version_cow": lambda spark, td, b: vt.merge_into_version_cow(
+        spark, td, spark.createDataFrame([(1, 7), (99, 7)], "k long, v long"), ["k"], backend=b
+    ),
+    "delete_where_dv": lambda spark, td, b: vt.delete_where_dv(
+        spark, td, F.col("k") == 3, backend=b
+    ),
+    "restore_version": lambda spark, td, b: vt.restore_version(spark, td, 1, backend=b),
+    "rename_column": lambda spark, td, b: vt.rename_column(spark, td, "v", "w", backend=b),
+    "cluster_version": lambda spark, td, b: vt.cluster_version(spark, td, 1, ["k"], backend=b),
+}
+
+
+def _head_table(spark, td):
+    df = spark.range(40).selectExpr("id AS k", "id * 2 AS v").repartition(2)
+    vt.write_version(df, td, manifest=True)
+    vt.write_version(df, td, manifest=True)
+
+
+@pytest.mark.parametrize("path", sorted(_COMMIT_PATHS))
+def test_commit_path_aborts_on_a_commit_after_its_read(spark, tmp_path, path):
+    """A commit landing between a path's read and its claim fails the
+    path with ConcurrentWriteError. It publishes nothing and leaves no
+    claim, staging dir or unreferenced ``_data`` prefix behind."""
+    td = str(tmp_path / "t")
+    _head_table(spark, td)
+    racing = _RaceInjectingBackend(LocalFsBackend(), spark, td)
+    with pytest.raises(ConcurrentWriteError, match="re-read and retry"):
+        _COMMIT_PATHS[path](spark, td, racing)
+    assert latest_version(td) == 3  # the racer's commit
+    assert versions(td) == [1, 2, 3]
+    left = [n for n in os.listdir(td) if n.startswith(("_claim_", "_staging_"))]
+    assert not left, left
+    backend = LocalFsBackend()
+    referenced = {
+        rel.split("/")[1]
+        for mv in (1, 2)
+        for rel in vt._manifest_all_rels(vt._manifest_body(td, mv, backend))
+    }
+    assert set(os.listdir(f"{td}/_data")) == referenced
+
+
+@pytest.mark.parametrize("path", sorted(_COMMIT_PATHS))
+def test_commit_path_leaves_a_reclaimed_claim_to_its_owner(spark, tmp_path, monkeypatch, path):
+    """Another writer's lease lands on the claim right after
+    ``_claim_slot`` hands it out (a reclaim while this writer stalled).
+    The claim heartbeat must not write it back: the path raises,
+    publishes nothing, and the marker keeps the other writer's lease."""
+    td = str(tmp_path / "t")
+    _head_table(spark, td)
+    real_claim_slot = vt._claim_slot
+
+    def reclaimed(table_dir, backend, base_version, **kw):
+        v = real_claim_slot(table_dir, backend, base_version, **kw)
+        backend.write_text_atomic(f"{table_dir}/_claim_v{v:05d}", vt._lease_line("intruder"))
+        return v
+
+    monkeypatch.setattr(vt, "_claim_slot", reclaimed)
+    with pytest.raises(ConcurrentWriteError, match="no longer owned"):
+        _COMMIT_PATHS[path](spark, td, None)
+    assert latest_version(td) == 2
+    assert versions(td) == [1, 2]
+    assert not os.path.exists(f"{td}/_manifest_v00003.json")
+    assert LocalFsBackend().read_text(f"{td}/_claim_v00003").startswith("intruder ")
+
+
+@pytest.mark.parametrize("backend", [LocalFsBackend(), ConditionalPutBackend()], ids=["local", "condput"])
+def test_claim_lease_refreshes_only_while_owned(tmp_path, backend):
+    """A claim lease writes nothing on entry (``_claim_slot`` just wrote
+    the marker), renews the marker while it names this writer, and
+    stops once another writer's lease replaces it."""
+    p = str(tmp_path / "_claim_v00001")
+    first = f"w1 {time.time() - 30:.3f}"
+    assert backend.create_exclusive(p, first)
+    with _Lease(backend, p, "w1", interval_sec=0.05, claim=True):
+        assert backend.read_text(p) == first
+        deadline = time.time() + 10
+        while backend.read_text(p) == first and time.time() < deadline:
+            time.sleep(0.005)
+        renewed = backend.read_text(p)
+        assert renewed.startswith("w1 ") and _lease_age_sec(renewed, time.time()) < 5
+        other = _lease_line("intruder")
+        backend.write_text_atomic(p, other)
+        time.sleep(0.3)
+        assert backend.read_text(p) == other
