@@ -179,7 +179,8 @@ def sweep() -> None:
     per_sf: dict[str, dict[str, float]] = {}
     for sf in ("0.001", "0.01", "0.1"):
         t0 = time.time()
-        timings = run_suite(spark, f"/root/testdata/sf{sf}")
+        errors: dict[str, str] = {}
+        timings = run_suite(spark, f"/root/testdata/sf{sf}", errors)
         fams = family_totals(timings)
         per_sf[sf] = fams
         print(
@@ -191,6 +192,7 @@ def sweep() -> None:
                     "unit": "sec",
                     "family_totals": fams,
                     "n_errors": sum(1 for t in timings.values() if t < 0),
+                    "errors": errors,
                 }
             )
         )

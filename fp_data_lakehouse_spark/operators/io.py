@@ -423,9 +423,12 @@ def io08_python_datasource_timetravel(spark: SparkSession, sf_dir: str) -> DataF
     reconstruction of v1, proving the custom source returns exactly
     the pinned snapshot even though _LATEST has moved on.
 
-    Scale notes: the reader fans out one InputPartition per parquet
-    file (file-granular task parallelism, same as the JVM scan) and
-    yields Arrow RecordBatches — the data path is
+    Scale notes: the reader packs the snapshot's parquet files into
+    bins by Spark's FilePartition rule (128 MiB per bin, 4 MiB of open
+    cost per file), one task per bin. The JVM scan also shrinks bins
+    to spread small reads over the default parallelism; the Python
+    planner has no SparkSession to ask, so a small snapshot is one
+    task. Reads yield Arrow RecordBatches — the data path is
     pyarrow-C++ -> Arrow IPC -> JVM, no per-row Python anywhere."""
     from ..sources.pyds import register_python_sources
     from ..sources.versioned import write_version
@@ -676,6 +679,7 @@ def io12_manifest_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     as Delta/Iceberg file statistics, on the same commit object."""
     from ..sources.pyds import (
         VersionedDataSource,
+        _bin_files,
         _snapshot_schema,
         register_python_sources,
     )
@@ -698,10 +702,10 @@ def io12_manifest_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader = VersionedDataSource({"path": table_dir, "pushdown": "true"}).reader(
         _snapshot_schema(table_dir, None)
     )
-    n_all = len(reader.partitions())
+    n_all = len(_bin_files(reader.partitions()))
     assert n_all >= 8, f"range layout lost its file count: {n_all}"
     reader.pushFilters([LessThanOrEqual(("o_custkey",), cutoff)])
-    n_kept = len(reader.partitions())
+    n_kept = len(_bin_files(reader.partitions()))
     # the cutoff is 1/8 of the key range over range-partitioned files:
     # a proportional bound (<= 1/4 of the files survive) measures the
     # skip without pinning Spark's exact file-emission count
@@ -880,6 +884,7 @@ def io14_stats_skipping_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.pyds import (
         VersionedDataSource,
+        _bin_files,
         _snapshot_schema,
         register_python_sources,
     )
@@ -913,29 +918,29 @@ def io14_stats_skipping_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader_a = VersionedDataSource({"path": dir_a, "pushdown": "true"}).reader(
         _snapshot_schema(dir_a, None)
     )
-    n_a = len(reader_a.partitions())
+    n_a = len(_bin_files(reader_a.partitions()))
     assert n_a >= 8, n_a
     reader_a.pushFilters([LessThanOrEqual(("skey",), kcut)])
-    n_str = len(reader_a.partitions())
+    n_str = len(_bin_files(reader_a.partitions()))
     assert n_str <= max(2, n_a // 4), f"string stats pruned nothing: {n_str}/{n_a}"
 
     reader_n = VersionedDataSource({"path": dir_a, "pushdown": "true"}).reader(
         _snapshot_schema(dir_a, None)
     )
     reader_n.pushFilters([IsNotNull(("memo",))])
-    n_nn = len(reader_n.partitions())
+    n_nn = len(_bin_files(reader_n.partitions()))
     assert n_nn <= n_a - 1, f"null-count stats pruned nothing: {n_nn}/{n_a}"
 
     reader_b = VersionedDataSource({"path": dir_b, "pushdown": "true"}).reader(
         _snapshot_schema(dir_b, None)
     )
-    n_b = len(reader_b.partitions())
+    n_b = len(_bin_files(reader_b.partitions()))
     assert n_b >= 4, n_b
     import datetime
 
     date_cut = datetime.date.fromisoformat(_IO14_DATE_CUT)
     reader_b.pushFilters([LessThanOrEqual(("odate",), date_cut)])
-    n_date = len(reader_b.partitions())
+    n_date = len(_bin_files(reader_b.partitions()))
     assert n_date <= max(2, n_b // 2), f"date stats pruned nothing: {n_date}/{n_b}"
 
     register_python_sources(spark)

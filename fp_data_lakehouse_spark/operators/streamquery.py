@@ -141,7 +141,8 @@ def _sized_state_partitions(spark: SparkSession, source_dir: str):
     partition), capped at the session's configured shuffle partitions —
     on a cluster-sized input the cap binds and behavior is exactly the
     deployment's own setting; SPARK_GRAFT_STREAM_STATE_PARTITIONS
-    overrides explicitly. Restart lifecycles are safe either way:
+    overrides explicitly. A session value that is not an int is left
+    as it is, unsized. Restart lifecycles are safe either way:
     Structured Streaming pins sql.shuffle.partitions in the offset-log
     metadata, so a RESUMED checkpoint keeps its original width
     regardless of this conf.
@@ -151,9 +152,15 @@ def _sized_state_partitions(spark: SparkSession, source_dir: str):
     rather than racing the set->restore window."""
     key = "spark.sql.shuffle.partitions"
     try:
-        cap = int(spark.conf.get(key))
+        original = spark.conf.get(key)
+        cap = int(original)
     except Exception:
-        cap = 200
+        cap = None
+    if cap is None:
+        # unreadable or not an int: no cap to size under, so the
+        # session's value is left exactly as it is
+        yield
+        return
     env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     parts = None
     if env:
@@ -188,7 +195,7 @@ def _sized_state_partitions(spark: SparkSession, source_dir: str):
     try:
         yield
     finally:
-        spark.conf.set(key, str(cap))
+        spark.conf.set(key, original)
 
 
 def _drain_to_memory(agg: DataFrame, prefix: str, src: str | None = None) -> DataFrame:
@@ -547,10 +554,11 @@ def st06_python_stream_version_feed(spark: SparkSession, sf_dir: str) -> DataFra
     snapshot-replay cousin) with snapshot, not delta, semantics — each
     version replays in FULL, so downstream consumers rebuild state per
     commit; the change-feed twin for delta semantics is vt01's batch
-    change_feed. Scale: each micro-batch fans out one InputPartition
-    per snapshot file, Arrow batches JVM-ward, and the stream keeps
-    tailing _LATEST as new versions commit — a daily-load audit
-    pipeline runs exactly this query unbounded."""
+    change_feed. Scale: each micro-batch packs its snapshot files into
+    bins by Spark's FilePartition rule (128 MiB per bin, 4 MiB of open
+    cost per file; one task per bin), Arrow batches JVM-ward, and the
+    stream keeps tailing _LATEST as new versions commit — a daily-load
+    audit pipeline runs exactly this query unbounded."""
     import shutil
 
     from ..sources.pyds import register_python_sources
@@ -1593,10 +1601,11 @@ def st17_version_feed_dv_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     neither double-emit rows it carried through the dv mask nor
     resurrect deleted ones).
 
-    Scale: the feed fans one InputPartition per file per version; the
-    dv mask is a sorted positional numpy filter against only that
-    file's dv slice (sources/pyds.py read()), so a dv-delete commit
-    replays at file granularity with no driver-side dv
+    Scale: the feed packs each micro-batch's files into bins by
+    Spark's FilePartition rule, one task per bin; the dv mask is a
+    sorted positional numpy filter against only each file's dv slice
+    (sources/pyds.py _read_file), with each dv object read once per
+    bin, so a dv-delete commit replays with no driver-side dv
     materialization. Reference parity: the reference's consumers
     re-read whole MySQL tables per run (ETL_FINAL.py:38); this is the
     tailing-consumer seam that sees each commit exactly once."""

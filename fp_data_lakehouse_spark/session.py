@@ -17,6 +17,10 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_session", "tune"]
 
+# The directory holding this package: workers import the daemon module
+# below from it whatever the driver's working directory is.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Runtime-settable confs applied defensively to ANY session handed to us
 # (the driver constructs its own SparkSession for verify runs).
 _RUNTIME_CONFS = {
@@ -73,6 +77,12 @@ def get_session(app_name: str = "fp_data_lakehouse_spark", cpus: int | None = No
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers fork from worker_daemon, which stops each task
+        # from re-parsing pyspark.zip (about 100 ms a task; see the
+        # module docstring). Static confs: a session built elsewhere
+        # keeps Spark's own daemon.
+        .config("spark.python.daemon.module", "fp_data_lakehouse_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

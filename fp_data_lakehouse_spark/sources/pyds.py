@@ -7,10 +7,16 @@ Two sources, registered via :func:`register_python_sources`:
 - ``fp_versioned`` (batch): reads one snapshot of a
   ``sources.versioned`` table. Options: ``path`` (table dir),
   ``version`` (time travel; default = the ``_LATEST`` pointer). The
-  reader hands Spark ONE InputPartition PER PARQUET FILE (the same
-  file-granular parallelism the JVM parquet scan uses — a 1000-file
-  snapshot fans out to 1000 tasks), yields Arrow RecordBatches (zero
-  per-row Python), and implements ``pushFilters`` conservatively:
+  reader packs the snapshot's parquet files into bins by Spark's own
+  ``FilePartition`` rule (a bin closes before the file that would take
+  it past 128 MiB, and every file counts 4 MiB of open cost on top of
+  its length — ``_pack``) and hands Spark one InputPartition per bin:
+  a 12-file, few-MB snapshot is one task, a 1000-file 10 GB snapshot
+  about 110. Unlike the JVM scan it does not shrink bins to spread
+  small reads over the default parallelism: the planner runs in a
+  Python worker with no SparkSession. Reads yield Arrow RecordBatches
+  (zero per-row Python), and the reader implements ``pushFilters``
+  conservatively:
   supported comparisons are translated to a pyarrow dataset predicate
   so parquet row-group statistics prune I/O on the executor, but every
   filter is RETURNED as unsupported so Spark re-applies it — double
@@ -36,7 +42,8 @@ Two sources, registered via :func:`register_python_sources`:
   ``{"version": N}`` dicts; ``initialOffset`` starts before the first
   retained version; ``latestOffset`` tracks the ``_LATEST`` pointer,
   so the stream keeps tailing as new versions commit (the Delta
-  "table-as-a-stream" pattern, reduced to its essentials).
+  "table-as-a-stream" pattern, reduced to its essentials). Each
+  micro-batch packs its files, across versions, by the same bin rule.
 
 ``fp_versioned`` also writes: ``df.write`` (one new version per save)
 and ``writeStream`` (one new version per micro-batch, exactly once per
@@ -675,7 +682,17 @@ def _read_parquet_batches(
 # ---------------------------------------------------------------------------
 
 
-class _FilePartition(InputPartition):
+# Spark's FilePartition packing constants, at their defaults
+# (spark.sql.files.maxPartitionBytes, spark.sql.files.openCostInBytes)
+_MAX_BIN_BYTES = 128 * 1024 * 1024
+_OPEN_COST_BYTES = 4 * 1024 * 1024
+
+
+class _FileRead:
+    """One data file of a bin: the version it replays (feed only), its
+    deletion-vector object, and the per-version column translation
+    (feed replay under column mapping; None = the reader's defaults)."""
+
     def __init__(
         self,
         file_path: str,
@@ -687,10 +704,100 @@ class _FilePartition(InputPartition):
         self.file_path = file_path
         self.version = version
         self.dv_path = dv_path
-        # per-version column translation (feed replay under column
-        # mapping): None = use the reader instance's defaults
         self.read_cols = read_cols
         self.added = added
+
+
+class _FileBin(InputPartition):
+    """One Spark task's files, read one after another."""
+
+    def __init__(self, files: list[_FileRead]):
+        self.files = files
+
+
+def _pack(files: list[_FileRead], sizes: list[int]) -> list[_FileBin]:
+    """Spark's ``FilePartition.getFilePartitions`` rule over the files
+    in plan order: a bin closes when the next file's length would take
+    it past ``_MAX_BIN_BYTES``, and each file adds ``_OPEN_COST_BYTES``
+    on top of its length. Plan order (version, then file name) keeps
+    each bin's rows in replay order; Spark sorts by size first."""
+    bins: list[_FileBin] = []
+    cur: list[_FileRead] = []
+    cur_bytes = 0
+    for f, size in zip(files, sizes):
+        if cur and cur_bytes + size > _MAX_BIN_BYTES:
+            bins.append(_FileBin(cur))
+            cur, cur_bytes = [], 0
+        cur.append(f)
+        cur_bytes += size + _OPEN_COST_BYTES
+    if cur:
+        bins.append(_FileBin(cur))
+    return bins
+
+
+def _bin_files(bins: list[_FileBin]) -> list[str]:
+    """The data files a packed plan reads, in plan order."""
+    return [f.file_path for b in bins for f in b.files]
+
+
+def _file_sizes(fs: "pafs.FileSystem", files: list[str], prefix: str) -> list[int]:
+    """Byte size per file, in one metadata call (0 when absent)."""
+    infos = fs.get_file_info(
+        [f[len(prefix):] if prefix and f.startswith(prefix) else f for f in files]
+    )
+    return [int(i.size or 0) for i in infos]
+
+
+def _read_file(
+    f: _FileRead,
+    cols: list[str],
+    read_cols: list[str],
+    added: dict | None,
+    pushed: list[tuple],
+    dv_tables: dict,
+) -> Iterator:
+    """One data file's batches named ``cols``: ``read_cols`` requested
+    from the file (``added`` null-backfills the ones it lacks), the
+    deletion-vector positions masked, physical names renamed to
+    logical ones. A file with a deletion vector is scanned WITHOUT the
+    pushed predicate: positions are absolute row indexes over the full
+    file, so a pruned scan would shift them (Spark re-applies its own
+    filters above). ``dv_tables`` caches each dv object's (file, pos)
+    table for the caller's bin, so files sharing one object read it
+    once."""
+    import pyarrow as pa
+
+    dead = None
+    if f.dv_path is not None:
+        import numpy as np
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        dv = dv_tables.get(f.dv_path)
+        if dv is None:
+            dfs, dp = _fs_and_path(f.dv_path)
+            dv = dv_tables[f.dv_path] = pq.read_table(
+                dp, filesystem=dfs, columns=["file", "pos"]
+            )
+        fname = f.file_path.rsplit("/", 1)[-1]
+        pos = dv.filter(pc.equal(dv.column("file"), fname)).column("pos")
+        dead = np.sort(pos.to_numpy().astype(np.int64, copy=False))
+        pushed = []
+    offset = 0
+    for batch in _read_parquet_batches(f.file_path, read_cols, pushed, added):
+        n = batch.num_rows
+        if dead is not None and dead.size:
+            lo = int(np.searchsorted(dead, offset, side="left"))
+            hi = int(np.searchsorted(dead, offset + n, side="left"))
+            if hi > lo:
+                mask = np.ones(n, dtype=bool)
+                mask[dead[lo:hi] - offset] = False
+                batch = batch.filter(pa.array(mask))
+        offset += n
+        if read_cols != cols:
+            # zero-copy rename physical -> logical
+            batch = pa.RecordBatch.from_arrays(list(batch.columns), names=cols)
+        yield batch
 
 
 class VersionedReader(DataSourceReader):
@@ -795,67 +902,23 @@ class VersionedReader(DataSourceReader):
                         stats.get(f.rsplit("/", 1)[-1]), pushed_phys
                     )
                 ]
-        return [
-            _FilePartition(f, dv_path=self._dv_by_name.get(f.rsplit("/", 1)[-1]))
+        entries = [
+            _FileRead(f, dv_path=self._dv_by_name.get(f.rsplit("/", 1)[-1]))
             for f in files
         ]
+        return _pack(entries, _file_sizes(fs, files, prefix))
 
-    def read(self, partition: _FilePartition):
-        import pyarrow as pa
-
+    def read(self, partition: _FileBin):
         phys_cols = [self._phys(c) for c in self._cols]
         pushed_phys = [
             (op, self._phys(col), val) for op, col, val in self._pushed
         ]
         added_arrow = getattr(self, "_added_arrow", None)
-        dv_path = getattr(partition, "dv_path", None)
-        if dv_path is None:
-            for batch in _read_parquet_batches(
-                partition.file_path, phys_cols, pushed_phys, added_arrow
-            ):
-                if self._log2phys:
-                    # zero-copy rename physical -> logical
-                    batch = pa.RecordBatch.from_arrays(
-                        list(batch.columns), names=self._cols
-                    )
-                yield batch
-            return
-        # deletion-vector file: scan WITHOUT arrow row/row-group
-        # filtering (positions are absolute row indexes over the full
-        # file; a pruned scan would shift them), mask deleted
-        # positions with a running offset, and let Spark re-apply its
-        # own filters above.
-        import numpy as np
-        import pyarrow.parquet as pq
-
-        dfs, dp = _fs_and_path(dv_path)
-        fname = partition.file_path.rsplit("/", 1)[-1]
-        dv_tbl = pq.read_table(dp, filesystem=dfs, columns=["file", "pos"])
-        dead = np.sort(
-            np.asarray(
-                dv_tbl.filter(pa.compute.equal(dv_tbl.column("file"), fname))
-                .column("pos")
-                .to_pylist(),
-                dtype=np.int64,
+        dv_tables: dict = {}
+        for f in partition.files:
+            yield from _read_file(
+                f, self._cols, phys_cols, added_arrow, pushed_phys, dv_tables
             )
-        )
-        offset = 0
-        for batch in _read_parquet_batches(
-            partition.file_path, phys_cols, [], added_arrow
-        ):
-            n = batch.num_rows
-            lo = int(np.searchsorted(dead, offset, side="left"))
-            hi = int(np.searchsorted(dead, offset + n, side="left"))
-            if hi > lo:
-                mask = np.ones(n, dtype=bool)
-                mask[dead[lo:hi] - offset] = False
-                batch = batch.filter(pa.array(mask))
-            offset += n
-            if self._log2phys:
-                batch = pa.RecordBatch.from_arrays(
-                    list(batch.columns), names=self._cols
-                )
-            yield batch
 
 
 class VersionedDataSource(DataSource):
@@ -1152,24 +1215,16 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         return cache[v]
 
     def _feed_sizes(self, fs, v: int, files: list[str], prefix: str) -> list[int]:
-        """Per-file byte sizes (for maxBytesPerTrigger), one metadata
-        GET per file per version, cached (bounded) — planning-time
-        only."""
+        """Per-file byte sizes (for maxBytesPerTrigger and bin
+        packing), one metadata call per version, cached (bounded) —
+        planning-time only."""
         cache = getattr(self, "_sizes_cache", None)
         if cache is None:
             cache = self._sizes_cache = {}
         if v not in cache:
             while len(cache) >= 64:
                 cache.pop(next(iter(cache)))
-            cache[v] = [
-                int(
-                    fs.get_file_info(
-                        f[len(prefix):] if prefix and f.startswith(prefix) else f
-                    ).size
-                    or 0
-                )
-                for f in files
-            ]
+            cache[v] = _file_sizes(fs, files, prefix)
         return cache[v]
 
     def initialOffset(self) -> dict:  # noqa: N802
@@ -1292,7 +1347,8 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         prefix = _uri_prefix(self._table_dir)
         sv, si = _feed_parse(start)
         ev, ei = _feed_parse(end)
-        out = []
+        entries: list[_FileRead] = []
+        sizes: list[int] = []
         from_v = sv if si is not None else sv + 1
         for v in range(from_v, ev + 1):
             files = self._feed_files(fs, p, v, prefix)
@@ -1305,73 +1361,41 @@ class VersionFeedStreamReader(DataSourceStreamReader):
                 for rel, dv_rel in _manifest_dv(fs, p, v).items()
             }
             read_cols_v, added_v = self._translation(fs, p, v)
-            out.extend(
-                _FilePartition(
+            entries.extend(
+                _FileRead(
                     f, v, dv_path=dv_by_name.get(f.rsplit("/", 1)[-1]),
                     read_cols=read_cols_v, added=added_v,
                 )
                 for f in files[lo:hi]
             )
+            sizes.extend(self._feed_sizes(fs, v, files, prefix)[lo:hi])
         # a zero-partition range is legal (no new versions this batch)
-        self._dbg(f"partitions -> {[(x.version, x.file_path.rsplit('/',2)[-2:]) for x in out[:40]]} n={len(out)}")
+        out = _pack(entries, sizes)
+        self._dbg(f"partitions -> {[(x.version, x.file_path.rsplit('/',2)[-2:]) for x in entries[:40]]} n={len(entries)} bins={len(out)}")
         self._advance(end)
         return out
 
-    def read(self, partition: _FilePartition):
+    def read(self, partition: _FileBin):
         import pyarrow as pa
 
-        self._dbg(f"read v={partition.version} f={partition.file_path.rsplit('/',2)[-2:]}")
-        # per-version translation rides the partition (set by
-        # partitions()); getattr tolerates instances/partitions built
-        # without __init__ (tests, legacy pickles) — absent mapping
-        # means physical == logical
-        read_cols = getattr(partition, "read_cols", None)
-        if read_cols is None:
-            read_cols = getattr(self, "_read_cols", self._cols)
-            added = getattr(self, "_added_arrow", None)
-        else:
-            added = getattr(partition, "added", None)
-        dv_path = getattr(partition, "dv_path", None)
-        dead = None
-        if dv_path is not None:
-            import numpy as np
-            import pyarrow.parquet as pq
-
-            dfs, dp = _fs_and_path(dv_path)
-            fname = partition.file_path.rsplit("/", 1)[-1]
-            dv_tbl = pq.read_table(dp, filesystem=dfs, columns=["file", "pos"])
-            dead = np.sort(
-                np.asarray(
-                    dv_tbl.filter(pa.compute.equal(dv_tbl.column("file"), fname))
-                    .column("pos")
-                    .to_pylist(),
-                    dtype=np.int64,
+        dv_tables: dict = {}
+        for f in partition.files:
+            self._dbg(f"read v={f.version} f={f.file_path.rsplit('/',2)[-2:]}")
+            # per-version translation rides the file entry (set by
+            # partitions()); getattr tolerates reader instances built
+            # without __init__ (tests) — absent mapping means
+            # physical == logical
+            read_cols = f.read_cols
+            if read_cols is None:
+                read_cols = getattr(self, "_read_cols", self._cols)
+                added = getattr(self, "_added_arrow", None)
+            else:
+                added = f.added
+            version = pa.scalar(f.version, pa.int64())
+            for batch in _read_file(f, self._cols, read_cols, added, [], dv_tables):
+                yield batch.append_column(
+                    "_version", pa.repeat(version, batch.num_rows)
                 )
-            )
-        offset = 0
-        for raw in _read_parquet_batches(
-            partition.file_path, read_cols, [], added
-        ):
-            n = raw.num_rows
-            if dead is not None and dead.size:
-                import numpy as np
-
-                lo = int(np.searchsorted(dead, offset, side="left"))
-                hi = int(np.searchsorted(dead, offset + n, side="left"))
-                if hi > lo:
-                    mask = np.ones(n, dtype=bool)
-                    mask[dead[lo:hi] - offset] = False
-                    raw = raw.filter(pa.array(mask))
-            offset += n
-            batch = (
-                raw
-                if read_cols == self._cols
-                else pa.RecordBatch.from_arrays(list(raw.columns), names=self._cols)
-            )
-            yield batch.append_column(
-                "_version",
-                pa.array([partition.version] * batch.num_rows, pa.int64()),
-            )
 
     def commit(self, end: dict) -> None:
         # snapshots are immutable and the checkpoint holds the replay

@@ -493,3 +493,46 @@ def test_sized_state_partitions_env_override(spark, tmp_path, monkeypatch):
     with _sized_state_partitions(spark, str(src)):
         assert spark.conf.get(key) == "2"
     assert spark.conf.get(key) == before
+
+
+def test_sized_state_partitions_leaves_a_non_int_value_alone(tmp_path, monkeypatch):
+    """A session value that is not an int is neither sized under nor
+    replaced: the block used to restore a fallback "200" over it."""
+    from fp_data_lakehouse_spark.operators.streamquery import (
+        _sized_state_partitions,
+    )
+
+    class _Conf:
+        def __init__(self, value):
+            self.value = value
+            self.sets = []
+
+        def get(self, key):
+            return self.value
+
+        def set(self, key, value):
+            self.sets.append(value)
+            self.value = value
+
+    class _Streams:
+        active = []
+
+    class _Session:
+        def __init__(self, value):
+            self.conf = _Conf(value)
+            self.streams = _Streams()
+
+    src = tmp_path / "s"
+    src.mkdir()
+    (src / "a.parquet").write_bytes(b"x" * 2**20)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    odd = _Session("not-a-number")
+    with _sized_state_partitions(odd, str(src)):
+        pass
+    assert odd.conf.value == "not-a-number" and odd.conf.sets == []
+
+    # an int value is sized under and restored to the exact string read
+    padded = _Session(" 8")
+    with _sized_state_partitions(padded, str(src)):
+        assert padded.conf.value == "1"
+    assert padded.conf.value == " 8"

@@ -166,9 +166,14 @@ def test_stream_reader_offsets(versioned_table):
     # empty range is legal (no new commits this micro-batch)
     assert r.partitions({"version": v2}, {"version": v2}) == []
     parts = r.partitions({"version": v1 - 1}, {"version": v2})
-    assert sorted({p.version for p in parts}) == [v1, v2]
-    # every partition is one parquet file of its snapshot
-    assert all(p.file_path.endswith(".parquet") for p in parts)
+    planned = [f for b in parts for f in b.files]
+    assert sorted({f.version for f in planned}) == [v1, v2]
+    # the bins cover every parquet file of both snapshots, once each
+    assert all(f.file_path.endswith(".parquet") for f in planned)
+    fs, p = pyds._fs_and_path(d)
+    assert sorted((f.version, f.file_path) for f in planned) == sorted(
+        (v, f) for v in (v1, v2) for f in pyds._version_files(fs, p, v)
+    )
 
 
 def test_stream_read_stamps_version(versioned_table):
@@ -198,7 +203,11 @@ def test_batch_partitions_are_file_granular(spark, tmp_path):
     reader = pyds.VersionedDataSource(
         {"path": d}
     ).reader(pyds._snapshot_schema(d, None))
-    assert len(reader.partitions()) == 4
+    # the plan reads each file once; four small files share one bin
+    planned = pyds._bin_files(reader.partitions())
+    assert len(planned) == 4
+    assert sorted(planned) == sorted(files)
+    assert len(reader.partitions()) == 1
 
 
 def test_writer_commits_new_versions_and_cleans_staging(spark, tmp_path):
@@ -706,9 +715,9 @@ def test_manifest_stats_skip_files_end_to_end(spark, tmp_path):
     reader = VersionedDataSource({"path": d, "pushdown": "true"}).reader(
         _snapshot_schema(d, None)
     )
-    assert len(reader.partitions()) == 8  # no filter: all files
+    assert len(pyds._bin_files(reader.partitions())) == 8  # no filter: all files
     reader.pushFilters([LessThanOrEqual(("k",), 100)])
-    pruned = reader.partitions()
+    pruned = pyds._bin_files(reader.partitions())
     assert 1 <= len(pruned) <= 2, f"expected ~1 file to survive, got {len(pruned)}"
 
     got = (
@@ -927,16 +936,14 @@ def test_statsless_file_is_never_skipped(spark, tmp_path):
     reader = VersionedDataSource({"path": d, "pushdown": "true"}).reader(
         _snapshot_schema(d, None)
     )
-    assert len(reader.partitions()) == 5
+    assert len(pyds._bin_files(reader.partitions())) == 5
     # k=5000 lives ONLY in the stats-less file; a k>=4000 filter prunes
     # every stats-bearing file but must keep the blind one
     from pyspark.sql.datasource import GreaterThanOrEqual
 
     reader.pushFilters([GreaterThanOrEqual(("k",), 4_000)])
-    kept = reader.partitions()
-    assert len(kept) == 1 and kept[0].file_path.endswith(extra), [
-        p.file_path for p in kept
-    ]
+    kept = pyds._bin_files(reader.partitions())
+    assert len(kept) == 1 and kept[0].endswith(extra), kept
     # and a full read through the format still sees the planted row
     register_python_sources(spark)
     got = (
@@ -1234,15 +1241,15 @@ def test_feed_rate_limit_offset_walk(spark, tmp_path):
     assert o0 == {"version": 0}
     o1 = r.latestOffset()
     assert o1 == {"version": 1, "index": 2}
-    parts = r.partitions(o0, o1)
+    parts = pyds._bin_files(r.partitions(o0, o1))
     assert len(parts) == 2
     o2 = r.latestOffset()
     assert o2 == {"version": 1}  # remaining 2 files complete the version
-    parts2 = r.partitions(o1, o2)
+    parts2 = pyds._bin_files(r.partitions(o1, o2))
     assert len(parts2) == 2
-    assert {p.file_path for p in parts} | {p.file_path for p in parts2} == {
-        p.file_path for p in r.partitions({"version": 0}, {"version": 1})
-    }
+    assert set(parts) | set(parts2) == set(
+        pyds._bin_files(r.partitions({"version": 0}, {"version": 1}))
+    )
     # caught up: canonical offset, empty batch
     assert r.latestOffset() == {"version": 1}
     assert r.partitions(o2, {"version": 1}) == []
@@ -1272,7 +1279,7 @@ def test_feed_max_bytes_soft_cap_walk(spark, tmp_path):
         end = r.latestOffset()
         if end == pos:
             break
-        seen.append(len(r.partitions(pos, end)))
+        seen.append(len(pyds._bin_files(r.partitions(pos, end))))
         pos = end
     assert seen == [1, 1, 1]
     assert pos == {"version": 1}
@@ -1324,3 +1331,169 @@ def test_feed_rate_limited_drain_resumes_exactly(spark, tmp_path):
     rows = spark.read.parquet(f"{work}/out").collect()
     got = {(r.id, r._version) for r in rows}
     assert got == {(i, 1) for i in range(50)}
+
+
+# ---------------------------------------------------------------------------
+# bin packing: the readers pack their files by Spark's FilePartition rule
+# ---------------------------------------------------------------------------
+
+
+def test_pack_follows_spark_file_partition_rule():
+    """Known answers for Spark's getFilePartitions rule at its default
+    constants: a bin closes before the file whose length would take it
+    past 128 MiB, and every file adds 4 MiB of open cost."""
+    mib = 1024 * 1024
+
+    def shape(sizes):
+        entries = [pyds._FileRead(f"f{i}.parquet") for i in range(len(sizes))]
+        return [len(b.files) for b in pyds._pack(entries, sizes)]
+
+    assert shape([]) == []
+    # 31 one-byte files bring a bin to 124 MiB + 31 B; the 32nd still
+    # fits (124 MiB + 32 B), the 33rd would pass 128 MiB
+    assert shape([1] * 40) == [32, 8]
+    # open cost alone fills a bin: 32 empty files reach 128 MiB, the
+    # 33rd still fits (the rule compares the current size plus length)
+    assert shape([0] * 40) == [33, 7]
+    # a file past the cap gets a bin of its own
+    assert shape([100 * mib, 30 * mib, 200 * mib, 1]) == [1, 1, 1, 1]
+    # 64 MiB + 60 MiB fits; the third file would pass 128 MiB
+    assert shape([60 * mib, 60 * mib, 1]) == [2, 1]
+
+
+def _feed_and_batch_tables(spark, tmp_path):
+    """A 4-version feed of 12 files (3 per version; v3 adds a deletion
+    vector, v4 a column rename) and a 12-file snapshot with one shared
+    deletion-vector object and a renamed column."""
+    from fp_data_lakehouse_spark.sources.versioned import (
+        delete_where_dv,
+        rename_column,
+        write_version,
+    )
+
+    feed = str(tmp_path / "feed12")
+    write_version(
+        spark.range(600).selectExpr("id AS k", "id * 3 AS v").repartitionByRange(3, "k"),
+        feed,
+        manifest=True,
+    )
+    write_version(
+        spark.range(900).selectExpr("id AS k", "id * 5 AS v").repartitionByRange(3, "k"),
+        feed,
+        manifest=True,
+    )
+    delete_where_dv(spark, feed, F.col("k") % 10 == 7)
+    rename_column(spark, feed, "v", "w")
+
+    snap = str(tmp_path / "snap12")
+    write_version(
+        spark.range(3000).selectExpr("id AS k", "id * 2 AS v").repartitionByRange(12, "k"),
+        snap,
+        manifest=True,
+    )
+    delete_where_dv(spark, snap, F.col("k") % 10 == 7)
+    rename_column(spark, snap, "v", "w")
+    return feed, snap
+
+
+def _read_rows(reader, bins) -> list[tuple]:
+    rows = []
+    for b in bins:
+        for batch in reader.read(b):
+            rows.extend(tuple(r.values()) for r in batch.to_pylist())
+    return sorted(rows)
+
+
+def _one_file_bins(bins):
+    return [pyds._FileBin([f]) for b in bins for f in b.files]
+
+
+def test_small_files_plan_one_bin_and_read_like_the_per_file_plan(spark, tmp_path):
+    feed_dir, snap_dir = _feed_and_batch_tables(spark, tmp_path)
+
+    src = pyds.VersionFeedDataSource({"path": feed_dir})
+    r = src.streamReader(src.schema())
+    bins = r.partitions(r.initialOffset(), r.latestOffset())
+    assert len(bins) == 1 and len(bins[0].files) == 12
+    assert [f.version for f in bins[0].files] == [1, 1, 1, 2, 2, 2, 3, 3, 3, 4, 4, 4]
+    got = _read_rows(r, bins)
+    assert got == _read_rows(r, _one_file_bins(bins))
+    want_v2 = {(k, k * 5) for k in range(900) if k % 10 != 7}
+    assert {(k, w) for k, w, v in got if v == 1} == {(k, k * 3) for k in range(600)}
+    assert {(k, w) for k, w, v in got if v == 2} == {(k, k * 5) for k in range(900)}
+    assert {(k, w) for k, w, v in got if v == 3} == want_v2
+    assert {(k, w) for k, w, v in got if v == 4} == want_v2
+
+    reader = pyds.VersionedDataSource({"path": snap_dir}).reader(
+        pyds._snapshot_schema(snap_dir, None)
+    )
+    bins = reader.partitions()
+    assert len(bins) == 1 and len(bins[0].files) == 12
+    got = _read_rows(reader, bins)
+    assert got == _read_rows(reader, _one_file_bins(bins))
+    assert got == sorted((k, 2 * k) for k in range(3000) if k % 10 != 7)
+
+
+def test_small_bin_constants_split_plans_and_keep_every_file_once(
+    spark, tmp_path, monkeypatch
+):
+    feed_dir, snap_dir = _feed_and_batch_tables(spark, tmp_path)
+    src = pyds.VersionFeedDataSource({"path": feed_dir})
+    r = src.streamReader(src.schema())
+    reader = pyds.VersionedDataSource({"path": snap_dir}).reader(
+        pyds._snapshot_schema(snap_dir, None)
+    )
+    start, end = r.initialOffset(), r.latestOffset()
+    want_feed = _read_rows(r, r.partitions(start, end))
+    want_snap = _read_rows(reader, reader.partitions())
+    fs, _ = pyds._fs_and_path(snap_dir)
+
+    for open_cost in (0, 100):
+        monkeypatch.setattr(pyds, "_OPEN_COST_BYTES", open_cost)
+        for plan, rd, want in (
+            (lambda: r.partitions(start, end), r, want_feed),
+            (reader.partitions, reader, want_snap),
+        ):
+            files = pyds._bin_files(plan())
+            sizes = dict(zip(files, pyds._file_sizes(fs, files, "")))
+            # about three files per bin
+            monkeypatch.setattr(
+                pyds, "_MAX_BIN_BYTES", 3 * (max(sizes.values()) + open_cost)
+            )
+            bins = plan()
+            assert len(bins) >= 4, [len(b.files) for b in bins]
+            # every file exactly once, in plan order
+            assert pyds._bin_files(bins) == files
+            # each bin stops where the rule says: its files fit, and
+            # the next bin's first file would not have
+            for i, b in enumerate(bins):
+                used = sum(sizes[f.file_path] + open_cost for f in b.files[:-1])
+                assert used + sizes[b.files[-1].file_path] <= pyds._MAX_BIN_BYTES or len(b.files) == 1
+                if i + 1 < len(bins):
+                    used += sizes[b.files[-1].file_path] + open_cost
+                    nxt = sizes[bins[i + 1].files[0].file_path]
+                    assert used + nxt > pyds._MAX_BIN_BYTES
+            assert _read_rows(rd, bins) == want
+
+
+def test_deletion_vector_object_is_read_once_per_bin(spark, tmp_path, monkeypatch):
+    import pyarrow.parquet as pq
+
+    _, snap_dir = _feed_and_batch_tables(spark, tmp_path)
+    reader = pyds.VersionedDataSource({"path": snap_dir}).reader(
+        pyds._snapshot_schema(snap_dir, None)
+    )
+    (b,) = reader.partitions()
+    dvs = {f.dv_path for f in b.files}
+    assert len(b.files) == 12 and len(dvs) == 1 and None not in dvs
+    calls = []
+    real = pq.read_table
+
+    def counting(*a, **kw):
+        calls.append(a[0] if a else kw.get("source"))
+        return real(*a, **kw)
+
+    monkeypatch.setattr(pq, "read_table", counting)
+    got = _read_rows(reader, [b])
+    assert len(calls) == 1, calls
+    assert got == sorted((k, 2 * k) for k in range(3000) if k % 10 != 7)
