@@ -1056,7 +1056,8 @@ def dd15_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured the whole operator ~40% faster (string vs int64 arrays
     # A/B'd end to end). The ids come from et10's scale-safe surrogate
     # assigner (range-partition + offset + narrow Arrow pass, NO
-    # single-partition exchange) ordered by (df, shingle) — i.e. the id
+    # single-partition exchange; its ids are int32, so past 2^31 - 1
+    # distinct shingles they overflow) ordered by (df, shingle) — i.e. the id
     # order IS the rarest-first global order the prefix filter needs,
     # so position windows just orderBy sid. Bijective mapping: counts,
     # sizes, intersections, and therefore the emitted rows are

@@ -31,6 +31,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_session
 from ..sources.sinks import alloc_scratch
 from .registry import register, run_overlapped
 
@@ -55,8 +56,6 @@ def _stream_source_dir(spark: SparkSession, sf_dir: str) -> str:
         try:
             os.symlink(src, link)
         except OSError:
-            import shutil
-
             shutil.copy(src, link)
     return d
 
@@ -73,60 +72,12 @@ GROUP BY 1, 2
 """
 
 
-import contextlib
-
-
-@contextlib.contextmanager
-def _skip_nodata_batch(spark: SparkSession):
-    """Skip the trailing NO-DATA micro-batch for queries whose EMITTED
-    rows provably cannot depend on it (r14 optimization, guide §1/§2:
-    the no-data batch re-reads and rewrites EVERY state-store entry to
-    emit nothing — measured 4.3 s of st04's 10.5 s wall, 0 input rows).
-
-    Eligible shapes only: complete-mode aggregations (the no-data batch
-    re-emits the identical table), stream-stream INNER joins (matches
-    emit on arrival; eviction emits nothing), and
-    dropDuplicatesWithinWatermark (survivors emit on first sight).
-    NOT eligible — and not used by — outer interval joins (st11/st12:
-    the null-padded rows emit AT eviction) or timeout-based stateful
-    ops (st07/st13/st14: timeout flush runs in the no-data batch).
-    Equality of the emitted sets is pinned by the same DuckDB oracles
-    that certify the queries. At scale the skipped pass is a full
-    rescan of state that scales with the stream, for zero output; a
-    continuous deployment of these shapes would set the same conf
-    (eviction then rides the next data batch).
-
-    COMPOSITION GUARD (r14 advice): the conf is SESSION-wide — a stream
-    started concurrently during the set→restore window (the
-    run_overlapped pattern) would inherit the skip even for ineligible
-    shapes. None of the callers overlap their drains, but if another
-    streaming query is ever live when this is entered, the skip is
-    DOWNGRADED to a no-op (the no-data batch runs; slower, always
-    correct) rather than risking a silent emitted-set change."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    try:
-        others_live = bool(spark.streams.active)
-    except Exception:
-        others_live = True
-    if others_live:
-        yield
-        return
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = "true"
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
-@contextlib.contextmanager
-def _sized_state_partitions(spark: SparkSession, source_dir: str):
-    """Scale-adaptive state-partition sizing for FRESH availableNow
-    drains (r15, guide §2.2/§6: partition counts must follow data size,
-    not a constant tuned for either local mode or the cluster).
+def _state_partitions(source_dir: str, shuffle_partitions: str) -> int | None:
+    """State-store width for a FRESH availableNow drain of
+    ``source_dir`` under a session whose ``spark.sql.shuffle.partitions``
+    is ``shuffle_partitions`` (r15, guide §2.2/§6: partition counts must
+    follow data size, not a constant tuned for either local mode or the
+    cluster). None means leave the session's width alone.
 
     A stateful streaming query creates one state-store instance per
     shuffle partition per stateful operator (a stream-stream join holds
@@ -137,87 +88,79 @@ def _sized_state_partitions(spark: SparkSession, source_dir: str):
     commits per batch — measured st11: 32 partitions 15.9 s vs 2
     partitions 2.3 s with an identical emitted set (partition count is
     results-neutral: all rows of a key hash to one partition at any
-    width). Size partitions from the source bytes (~1 MiB of source per
-    partition), capped at the session's configured shuffle partitions —
-    on a cluster-sized input the cap binds and behavior is exactly the
-    deployment's own setting; SPARK_GRAFT_STREAM_STATE_PARTITIONS
-    overrides explicitly. A session value that is not an int is left
-    as it is, unsized. Restart lifecycles are safe either way:
+    width). The width keeps ~1 MiB of source per partition, capped at
+    the session's value — on a cluster-sized input the cap binds and
+    behavior is exactly the deployment's own setting. A remote
+    (``://``), missing or empty source, or a session value that is not
+    an int, is not sized. Restart lifecycles are safe either way:
     Structured Streaming pins sql.shuffle.partitions in the offset-log
-    metadata, so a RESUMED checkpoint keeps its original width
-    regardless of this conf.
-
-    Same composition guard as _skip_nodata_batch: the conf is
-    session-wide, so when another stream is live the sizing is skipped
-    rather than racing the set->restore window."""
-    key = "spark.sql.shuffle.partitions"
+    metadata, so a RESUMED checkpoint keeps its original width."""
     try:
-        original = spark.conf.get(key)
-        cap = int(original)
-    except Exception:
-        cap = None
-    if cap is None:
-        # unreadable or not an int: no cap to size under, so the
-        # session's value is left exactly as it is
-        yield
-        return
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    parts = None
-    if env:
-        try:
-            parts = max(1, int(env))
-        except ValueError:
-            parts = None
-    if parts is None and "://" not in source_dir:
-        try:
-            total = 0
-            if os.path.isdir(source_dir):
-                for dirpath, _dirs, files in os.walk(source_dir, followlinks=True):
-                    for fn in files:
-                        try:
-                            total += os.path.getsize(os.path.join(dirpath, fn))
-                        except OSError:
-                            pass
-            elif os.path.isfile(source_dir):
-                total = os.path.getsize(source_dir)
-            if total > 0:
-                parts = min(cap, max(1, (total + 2**20 - 1) // 2**20))
-        except Exception:
-            parts = None
-    try:
-        others_live = bool(spark.streams.active)
-    except Exception:
-        others_live = True
-    if parts is None or parts >= cap or others_live:
-        yield
-        return
-    spark.conf.set(key, str(int(parts)))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, original)
+        cap = int(shuffle_partitions)
+    except (TypeError, ValueError):
+        return None
+    if "://" in source_dir:
+        return None
+    total = 0
+    if os.path.isdir(source_dir):
+        for dirpath, _dirs, files in os.walk(source_dir, followlinks=True):
+            for fn in files:
+                try:
+                    total += os.path.getsize(os.path.join(dirpath, fn))
+                except OSError:
+                    pass
+    elif os.path.isfile(source_dir):
+        total = os.path.getsize(source_dir)
+    parts = (total + 2**20 - 1) // 2**20
+    return parts if 0 < parts < cap else None
 
 
-def _drain_to_memory(agg: DataFrame, prefix: str, src: str | None = None) -> DataFrame:
-    """Run the streaming aggregation to completion (availableNow) into
-    a uniquely-named memory sink and return the sink table.
+def _drain_session(
+    spark: SparkSession, source_dir: str, skip_no_data_batch: bool = False
+) -> SparkSession:
+    """The child session (session.scoped_session) a fresh availableNow
+    drain of ``source_dir`` builds its stream on: state partitions
+    sized by _state_partitions and, with ``skip_no_data_batch``, no
+    trailing NO-DATA micro-batch. ``spark`` is never written, so a
+    drain's confs cannot reach another stream of the same session.
 
-    Complete-mode only (both callers): the no-data batch would re-emit
-    the identical table, so it is skipped (_skip_nodata_batch). When
-    the caller passes its source dir, state partitions are sized to it
-    (_sized_state_partitions)."""
-    spark = agg.sparkSession
+    Skip the no-data batch only for queries whose EMITTED rows provably
+    cannot depend on it (r14 optimization, guide §1/§2: the no-data
+    batch re-reads and rewrites EVERY state-store entry to emit nothing
+    — measured 4.3 s of st04's 10.5 s wall, 0 input rows). Eligible
+    shapes only: complete-mode aggregations (the no-data batch re-emits
+    the identical table), stream-stream INNER joins (matches emit on
+    arrival; eviction emits nothing), and dropDuplicatesWithinWatermark
+    (survivors emit on first sight). NOT eligible: outer interval joins
+    (st11/st12: the null-padded rows emit AT eviction) or timeout-based
+    stateful ops (st07/st13/st14: timeout flush runs in the no-data
+    batch). Equality of the emitted sets is pinned by the same DuckDB
+    oracles that certify the queries. A continuous deployment of the
+    eligible shapes would set the same conf (eviction then rides the
+    next data batch)."""
+    confs = {}
+    if skip_no_data_batch:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    parts = _state_partitions(source_dir, spark.conf.get("spark.sql.shuffle.partitions"))
+    if parts is not None:
+        confs["spark.sql.shuffle.partitions"] = str(parts)
+    return scoped_session(spark, confs)
+
+
+def _drain_to_memory(stream: DataFrame, prefix: str, mode: str = "append") -> DataFrame:
+    """Run ``stream`` to completion (availableNow) into a uniquely
+    named memory sink and return the sink table, read from the session
+    the stream was built on."""
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    with _skip_nodata_batch(spark), _sized_state_partitions(spark, src or ""):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return stream.sparkSession.table(name)
 
 
 @register("st01_stream_tumbling_equivalence", oracle=_ST01_SQL)
@@ -230,8 +173,9 @@ def st01_stream_tumbling_equivalence(spark: SparkSession, sf_dir: str) -> DataFr
     from ..streaming.events import hourly_tumbling_counts_stream, read_events_stream
 
     src = _stream_source_dir(spark, sf_dir)
-    stream = read_events_stream(spark, src)
-    return _drain_to_memory(hourly_tumbling_counts_stream(stream), "st01", src)
+    # complete mode: the no-data batch re-emits the identical table
+    stream = read_events_stream(_drain_session(spark, src, skip_no_data_batch=True), src)
+    return _drain_to_memory(hourly_tumbling_counts_stream(stream), "st01", "complete")
 
 
 # Sliding windows (1 hour every 15 minutes): every event falls in
@@ -260,8 +204,9 @@ def st02_stream_sliding_equivalence(spark: SparkSession, sf_dir: str) -> DataFra
     from ..streaming.events import read_events_stream, sliding_counts_stream
 
     src = _stream_source_dir(spark, sf_dir)
-    stream = read_events_stream(spark, src)
-    return _drain_to_memory(sliding_counts_stream(stream), "st02", src)
+    # complete mode: the no-data batch re-emits the identical table
+    stream = read_events_stream(_drain_session(spark, src, skip_no_data_batch=True), src)
+    return _drain_to_memory(sliding_counts_stream(stream), "st02", "complete")
 
 
 # Stream-static enrichment: the dimension derives deterministically
@@ -286,8 +231,6 @@ def st03_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
     event_type) must match the oracle's batch join. Certifies the
     STATELESS streaming join path (no watermark, no join state) next
     to st01/st02's stateful window paths."""
-    from pyspark.sql import functions as F
-
     from ..sources.catalog import load_table
     from ..streaming.events import enriched_stream, read_events_stream
 
@@ -302,18 +245,9 @@ def st03_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("user_id", seg.alias("segment"), F.lit("r0").alias("region"))
     )
     stream = read_events_stream(spark, _stream_source_dir(spark, sf_dir))
-    enriched = enriched_stream(stream, user_dim)
-    name = f"st03_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")  # stateless join: append-compatible
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # stateless join: append-compatible
     return (
-        spark.table(name)
+        _drain_to_memory(enriched_stream(stream, user_dim), "st03")
         .groupBy("segment", "event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -366,21 +300,11 @@ def st04_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import attribution_stream, read_events_stream
 
     src = _stream_source_dir(spark, sf_dir)
-    stream = read_events_stream(spark, src)
-    pairs = attribution_stream(stream, window_sec=_ST04_WINDOW_SEC)
-    name = f"st04_{uuid.uuid4().hex[:8]}"
     # inner join: matches emit on arrival, the no-data batch emits
     # nothing (measured identical 371-row set, 10.5 -> 6.0 s)
-    with _skip_nodata_batch(spark), _sized_state_partitions(spark, src):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    stream = read_events_stream(_drain_session(spark, src, skip_no_data_batch=True), src)
+    pairs = attribution_stream(stream, window_sec=_ST04_WINDOW_SEC)
+    return _drain_to_memory(pairs, "st04").select(
         "purchase_id",
         "user_id",
         F.col("purchase_ep").cast("long").alias("purchase_ep"),
@@ -425,8 +349,6 @@ def _redelivered_source_dir(spark: SparkSession, sf_dir: str) -> str:
                 try:
                     os.symlink(src, link)
                 except OSError:
-                    import shutil
-
                     shutil.copy(src, link)
         return d
     # scheme'd or directory fixture: copy every data file twice through
@@ -482,22 +404,11 @@ def st05_stream_redelivery_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import dedup_events_stream, read_events_stream
 
     src = _redelivered_source_dir(spark, sf_dir)
-    stream = read_events_stream(spark, src)
-    deduped = dedup_events_stream(stream)
-    name = f"st05_{uuid.uuid4().hex[:8]}"
     # dropDuplicatesWithinWatermark emits survivors on first sight;
     # the no-data batch only evicts state
-    with _skip_nodata_batch(spark), _sized_state_partitions(spark, src):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = read_events_stream(_drain_session(spark, src, skip_no_data_batch=True), src)
     return (
-        spark.table(name)
+        _drain_to_memory(dedup_events_stream(stream), "st05")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -559,8 +470,6 @@ def st06_python_stream_version_feed(spark: SparkSession, sf_dir: str) -> DataFra
     cost per file; one task per bin), Arrow batches JVM-ward, and the
     stream keeps tailing _LATEST as new versions commit — a daily-load
     audit pipeline runs exactly this query unbounded."""
-    import shutil
-
     from ..sources.pyds import register_python_sources
     from ..sources.versioned import write_version
 
@@ -585,16 +494,7 @@ def st06_python_stream_version_feed(spark: SparkSession, sf_dir: str) -> DataFra
         F.sum("n_orders").cast("long").alias("sum_orders"),
         F.sum("cents").cast("long").alias("sum_cents"),
     )
-    name = f"st06_{uuid.uuid4().hex[:8]}"
-    q = (
-        per_version.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain_to_memory(per_version, "st06", "complete").select(
         F.col("_version").alias("version"), "n_customers", "sum_orders", "sum_cents"
     )
 
@@ -673,22 +573,12 @@ def st07_stateful_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import sessionize_stream
 
     stream = read_events_stream(spark, _stream_source_dir(spark, sf_dir))
-    sessions = sessionize_stream(stream)
-    name = f"st07_{uuid.uuid4().hex[:8]}"
-    # NOT sized via _sized_state_partitions (r15): the per-key state
-    # machine runs in PYTHON workers, so shuffle width is its compute
+    # NOT sized via _drain_session (r15): the per-key state machine
+    # runs in PYTHON workers, so shuffle width is its compute
     # parallelism, not just state-store count — sizing to the 2 MB
     # source measured 3.4 -> 5.4 s (the lone Python-stateful shape;
     # the JVM-stateful drains all sped up 35-75% from the same change).
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(sessionize_stream(stream), "st07")
 
 
 @register("st08_foreachbatch_exactly_once", oracle=_ST05_SQL)
@@ -738,7 +628,6 @@ def _stage_single_file(df, dest_dir: str, name: str) -> None:
     single task, then move the part file) — fixture staging for
     file-arrival simulations; a real feed's files just arrive."""
     import glob
-    import shutil as _sh
 
     tmp = f"{dest_dir}/_tmp_{name}"
     # repartition(1), not coalesce(1): these fixture frames are
@@ -748,8 +637,8 @@ def _stage_single_file(df, dest_dir: str, name: str) -> None:
     # keeps the parents parallel and moves only a handful of rows
     df.repartition(1).write.mode("overwrite").parquet(tmp)
     part = glob.glob(f"{tmp}/part-*.parquet")[0]
-    _sh.move(part, f"{dest_dir}/{name}")
-    _sh.rmtree(tmp, ignore_errors=True)
+    shutil.move(part, f"{dest_dir}/{name}")
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register("st09_checkpoint_restart_resume", oracle=_ST05_SQL)
@@ -961,21 +850,12 @@ def st11_stream_leftouter_interval_join(
     from ..streaming.events import attribution_stream, read_events_stream
 
     src = _stream_source_dir(spark, sf_dir)
-    stream = read_events_stream(spark, src)
+    # outer join: null-padded rows emit AT eviction, in the no-data batch
+    stream = read_events_stream(_drain_session(spark, src), src)
     pairs = attribution_stream(
         stream, window_sec=_ST04_WINDOW_SEC, how="leftOuter"
     )
-    name = f"st11_{uuid.uuid4().hex[:8]}"
-    with _sized_state_partitions(spark, src):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    return _drain_to_memory(pairs, "st11").select(
         "purchase_id",
         "user_id",
         F.col("purchase_ep").cast("long").alias("purchase_ep"),
@@ -1058,21 +938,12 @@ def st12_stream_fullouter_interval_join(
     from ..streaming.events import attribution_stream, read_events_stream
 
     src = _stream_source_dir(spark, sf_dir)
-    stream = read_events_stream(spark, src)
+    # outer join: null-padded rows emit AT eviction, in the no-data batch
+    stream = read_events_stream(_drain_session(spark, src), src)
     pairs = attribution_stream(
         stream, window_sec=_ST04_WINDOW_SEC, how="fullOuter"
     )
-    name = f"st12_{uuid.uuid4().hex[:8]}"
-    with _sized_state_partitions(spark, src):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    return _drain_to_memory(pairs, "st12").select(
         "purchase_id",
         "user_id",
         F.col("purchase_ep").cast("long").alias("purchase_ep"),
@@ -1143,7 +1014,9 @@ def st13_stream_dynamic_gap_sessions(spark: SparkSession, sf_dir: str) -> DataFr
     from ..streaming.events import read_events_stream
 
     src = _stream_source_dir(spark, sf_dir)
-    stream = read_events_stream(spark, src)
+    # sessions emit when the watermark passes their end, which the
+    # no-data batch advances
+    stream = read_events_stream(_drain_session(spark, src), src)
     gap = F.when(F.col("event_type") == "purchase", F.lit("30 minutes")).otherwise(
         F.lit("10 minutes")
     )
@@ -1158,17 +1031,7 @@ def st13_stream_dynamic_gap_sessions(spark: SparkSession, sf_dir: str) -> DataFr
             "n_events",
         )
     )
-    name = f"st13_{uuid.uuid4().hex[:8]}"
-    with _sized_state_partitions(spark, src):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(agg, "st13")
 
 
 # ---------------------------------------------------------------------------
@@ -1217,7 +1080,11 @@ def st14_stateful_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFr
     us = F.unix_micros(F.col("ts"))
 
     def _drain_once() -> None:
-        stream = read_events_stream(spark, src)
+        # run 1 plans with the sized width; run 2 RESUMES the checkpoint
+        # and keeps run 1's pinned width from the offset-log metadata;
+        # the no-data batch stays (it emits the sessions the watermark
+        # closes)
+        stream = read_events_stream(_drain_session(spark, src), src)
         gap = F.when(
             F.col("event_type") == "purchase", F.lit("30 minutes")
         ).otherwise(F.lit("10 minutes"))
@@ -1232,18 +1099,15 @@ def st14_stateful_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFr
                 "n_events",
             )
         )
-        # run 1 plans with the sized width; run 2 RESUMES the checkpoint
-        # and keeps run 1's pinned width from the offset-log metadata
-        with _sized_state_partitions(spark, src):
-            q = (
-                agg.writeStream.foreachBatch(
-                    lambda b, _i: b.write.mode("append").parquet(target)
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+        q = (
+            agg.writeStream.foreachBatch(
+                lambda b, _i: b.write.mode("append").parquet(target)
             )
-            q.awaitTermination()
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
     _stage_single_file(events.filter(us <= cutoff), src, "early.parquet")
     _drain_once()  # run 1: drains the early half, checkpoints, STOPS
@@ -1646,16 +1510,7 @@ def st17_version_feed_dv_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_orders").cast("long").alias("sum_orders"),
         F.sum("cents").cast("long").alias("sum_cents"),
     )
-    name = f"st17_{uuid.uuid4().hex[:8]}"
-    q = (
-        per_version.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain_to_memory(per_version, "st17", "complete").select(
         F.col("_version").alias("version"), "n_customers", "sum_orders", "sum_cents"
     )
 

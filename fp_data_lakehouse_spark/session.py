@@ -15,7 +15,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_session", "tune"]
+__all__ = ["get_session", "scoped_session", "tune"]
 
 # The directory holding this package: workers import the daemon module
 # below from it whatever the driver's working directory is.
@@ -58,6 +58,23 @@ def tune(spark: SparkSession) -> SparkSession:
             # defaults there are acceptable; never fail a query over it.
             pass
     return spark
+
+
+def scoped_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """A child of ``spark`` that runs under ``confs``, so a query can
+    tune confs for itself without writing any on ``spark``. The child
+    shares the SparkContext and table cache but has its own SQLConf,
+    temp views, UDFs and streaming query manager. ``newSession()``
+    starts from the SparkContext conf and drops every conf set on
+    ``spark`` at runtime (``tune()``'s, on a session built elsewhere),
+    so those are copied first. Python DataSource registrations are not
+    carried over."""
+    child = spark.newSession()
+    fresh = child.conf.getAll
+    for k, v in {**spark.conf.getAll, **confs}.items():
+        if fresh.get(k) != v:
+            child.conf.set(k, v)
+    return child
 
 
 def get_session(app_name: str = "fp_data_lakehouse_spark", cpus: int | None = None) -> SparkSession:

@@ -83,6 +83,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from ..session import scoped_session
 from .roaring import deserialize_rbm_array, positions_from_dv_blob, z85_decode
 
 _COMMIT = re.compile(r"^(\d{20})\.json$")
@@ -569,8 +570,9 @@ _ID_SCAN_SESSIONS: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
 
 
 def _id_scan_session(spark: SparkSession) -> SparkSession:
-    """A cloned session (shared SparkContext, isolated SQLConf) with
-    parquet field-id resolution enabled, cached per parent session —
+    """A child session (session.scoped_session: shared SparkContext,
+    isolated SQLConf carrying the parent's runtime confs) with parquet
+    field-id resolution enabled, cached per parent session —
     id-mode scans build their frames HERE so the flip is scoped to
     them: a DataFrame executes under its own session's SQLConf, and
     the caller's session is never mutated (ADVICE r12: the old
@@ -580,8 +582,7 @@ def _id_scan_session(spark: SparkSession) -> SparkSession:
     cached = _ID_SCAN_SESSIONS.get(spark)
     if cached is not None:
         return cached
-    s = spark.newSession()
-    s.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    s = scoped_session(spark, {"spark.sql.parquet.fieldId.read.enabled": "true"})
     _ID_SCAN_SESSIONS[spark] = s
     return s
 

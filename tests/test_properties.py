@@ -448,13 +448,17 @@ def test_run_overlapped_sequential_item_gets_final_retry():
 
 
 # ---------------------------------------------------------------------------
-# _sized_state_partitions (r15): scale-adaptive streaming state width
+# streamquery._state_partitions (r15): scale-adaptive streaming state width
 # ---------------------------------------------------------------------------
 
 
 def test_sized_state_partitions_sizes_caps_and_restores(spark, tmp_path):
+    """The width is a pure function of the source bytes and the
+    session's value; a drain session carries it and the session it
+    was built from keeps its own value."""
     from fp_data_lakehouse_spark.operators.streamquery import (
-        _sized_state_partitions,
+        _drain_session,
+        _state_partitions,
     )
 
     key = "spark.sql.shuffle.partitions"
@@ -463,76 +467,29 @@ def test_sized_state_partitions_sizes_caps_and_restores(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
     (src / "a.parquet").write_bytes(b"x" * (3 * 2**20))
-    with _sized_state_partitions(spark, str(src)):
-        assert spark.conf.get(key) == "3"
+    assert _state_partitions(str(src), before) == 3
+    assert _drain_session(spark, str(src)).conf.get(key) == "3"
     assert spark.conf.get(key) == before
 
-    # a source larger than cap x 1 MiB leaves the session conf alone
+    # a source larger than cap x 1 MiB is not sized
     big = tmp_path / "big"
     big.mkdir()
     (big / "a.parquet").write_bytes(b"x" * (int(before) + 2) * 2**20)
-    with _sized_state_partitions(spark, str(big)):
-        assert spark.conf.get(key) == before
+    assert _state_partitions(str(big), before) is None
+    assert _drain_session(spark, str(big)).conf.get(key) == before
 
-    # empty/unknown source: no-op
-    with _sized_state_partitions(spark, str(tmp_path / "missing")):
-        assert spark.conf.get(key) == before
-
-
-def test_sized_state_partitions_env_override(spark, tmp_path, monkeypatch):
-    from fp_data_lakehouse_spark.operators.streamquery import (
-        _sized_state_partitions,
-    )
-
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    src = tmp_path / "s"
-    src.mkdir()
-    (src / "a.parquet").write_bytes(b"x" * 2**20)
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "2")
-    with _sized_state_partitions(spark, str(src)):
-        assert spark.conf.get(key) == "2"
-    assert spark.conf.get(key) == before
+    # empty/unknown or remote source: not sized
+    assert _state_partitions(str(tmp_path / "missing"), before) is None
+    assert _state_partitions("s3://bucket/events", before) is None
 
 
-def test_sized_state_partitions_leaves_a_non_int_value_alone(tmp_path, monkeypatch):
-    """A session value that is not an int is neither sized under nor
-    replaced: the block used to restore a fallback "200" over it."""
-    from fp_data_lakehouse_spark.operators.streamquery import (
-        _sized_state_partitions,
-    )
-
-    class _Conf:
-        def __init__(self, value):
-            self.value = value
-            self.sets = []
-
-        def get(self, key):
-            return self.value
-
-        def set(self, key, value):
-            self.sets.append(value)
-            self.value = value
-
-    class _Streams:
-        active = []
-
-    class _Session:
-        def __init__(self, value):
-            self.conf = _Conf(value)
-            self.streams = _Streams()
+def test_sized_state_partitions_leaves_a_non_int_value_alone(tmp_path):
+    """A session value that is not an int is not sized under; an int
+    value with padding is."""
+    from fp_data_lakehouse_spark.operators.streamquery import _state_partitions
 
     src = tmp_path / "s"
     src.mkdir()
     (src / "a.parquet").write_bytes(b"x" * 2**20)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
-    odd = _Session("not-a-number")
-    with _sized_state_partitions(odd, str(src)):
-        pass
-    assert odd.conf.value == "not-a-number" and odd.conf.sets == []
-
-    # an int value is sized under and restored to the exact string read
-    padded = _Session(" 8")
-    with _sized_state_partitions(padded, str(src)):
-        assert padded.conf.value == "1"
-    assert padded.conf.value == " 8"
+    assert _state_partitions(str(src), "not-a-number") is None
+    assert _state_partitions(str(src), " 8") == 1
