@@ -1534,6 +1534,25 @@ FROM t
 """
 
 
+def _st18_table(spark: SparkSession, sf_dir: str) -> str:
+    """st18's table: per-customer order totals as ONE manifest version
+    of four files. The round-robin shuffle is what makes it four: a
+    ``repartition(4, "o_custkey")`` repeats the aggregation's own hash
+    partitioning, so at ``spark.sql.shuffle.partitions=4`` the planner
+    drops it and AQE coalesces the aggregation into one file."""
+    from ..sources.versioned import write_version
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    totals = orders.groupBy("o_custkey").agg(
+        F.count("*").alias("n_orders"), F.sum(cents).alias("cents")
+    )
+    table_dir = alloc_scratch(spark, "st18_rate") + "/t"
+    shutil.rmtree(table_dir, ignore_errors=True)
+    write_version(totals.repartition(4), table_dir, manifest=True)
+    return table_dir
+
+
 @register("st18_versioned_feed_rate_limited", oracle=_ST18_SQL)
 def st18_versioned_feed_rate_limited(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADMISSION CONTROL on fp_versioned_feed (round 12): one committed
@@ -1550,17 +1569,8 @@ def st18_versioned_feed_rate_limited(spark: SparkSession, sf_dir: str) -> DataFr
     backfill instead of one batch-sized transaction; offsets gain a
     file index (sources/pyds.py VersionFeedStreamReader)."""
     from ..sources.pyds import register_python_sources
-    from ..sources.versioned import write_version
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
-    totals = orders.groupBy("o_custkey").agg(
-        F.count("*").alias("n_orders"), F.sum(cents).alias("cents")
-    )
-    table_dir = alloc_scratch(spark, "st18_rate") + "/t"
-    shutil.rmtree(table_dir, ignore_errors=True)
-    write_version(totals.repartition(4, "o_custkey"), table_dir, manifest=True)
-
+    table_dir = _st18_table(spark, sf_dir)
     register_python_sources(spark)
     work = alloc_scratch(spark, "st18_drain")
 

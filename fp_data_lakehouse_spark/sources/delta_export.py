@@ -55,14 +55,7 @@ from pyspark.sql import SparkSession
 
 from .delta import delta_snapshot
 from .roaring import z85_encode
-from .versioned import (
-    _backend_for,
-    _manifest_body,
-    _manifest_versions,
-    latest_version,
-    read_table,
-    versions as _versions,
-)
+from .versioned import _backend_for, read_table, resolve_snapshot
 
 _DV_EXPORT_MAX_ROWS = 50_000_000  # driver-side bitmap assembly bound
 _DV_TAG = "fpDvRel"  # add.tags breadcrumb: which fp dv object this mask came from
@@ -432,26 +425,13 @@ def publish_delta_log(
     stays exact."""
     backend = backend or _backend_for(table_dir, spark)
     td = table_dir.rstrip("/")
-    v = version if version is not None else latest_version(table_dir, backend)
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    if v not in set(_versions(table_dir, backend)):
-        raise FileNotFoundError(f"version {v} not retained in {table_dir}")
-
-    if v in _manifest_versions(table_dir, backend):
-        body = _manifest_body(table_dir, v, backend)
-        files = list(body["files"])
+    v, body, files = resolve_snapshot(table_dir, version, backend)
+    if body is not None:
         columns = body.get("columns")
         dv_state = _dv_state(body)
         stats = body.get("stats") or {}
         dv_rows = body.get("dv_rows")
     else:  # copy-published v-dir: plain files, no mapping, no dvs
-        vdir_rel = f"v{v:05d}"
-        files = sorted(
-            f"{vdir_rel}/{n}"
-            for n in backend.list_names(f"{td}/{vdir_rel}")
-            if n.endswith(".parquet")
-        )
         columns, dv_state, stats, dv_rows = None, {}, {}, None
     if not files:
         raise FileNotFoundError(f"version {v} names no data files in {table_dir}")

@@ -6,7 +6,7 @@ Two sources, registered via :func:`register_python_sources`:
 
 - ``fp_versioned`` (batch): reads one snapshot of a
   ``sources.versioned`` table. Options: ``path`` (table dir),
-  ``version`` (time travel; default = the ``_LATEST`` pointer). The
+  ``version`` (time travel; default = the newest committed version). The
   reader packs the snapshot's parquet files into bins by Spark's own
   ``FilePartition`` rule (a bin closes before the file that would take
   it past 128 MiB, and every file counts 4 MiB of open cost on top of
@@ -40,7 +40,7 @@ Two sources, registered via :func:`register_python_sources`:
   downstream pipeline replays table history exactly once, in commit
   order, with a ``_version`` column stamping provenance. Offsets are
   ``{"version": N}`` dicts; ``initialOffset`` starts before the first
-  retained version; ``latestOffset`` tracks the ``_LATEST`` pointer,
+  retained version; ``latestOffset`` tracks the newest committed one,
   so the stream keeps tailing as new versions commit (the Delta
   "table-as-a-stream" pattern, reduced to its essentials). Each
   micro-batch packs its files, across versions, by the same bin rule.
@@ -59,9 +59,12 @@ consumable from SQL (``CREATE TEMPORARY VIEW ... USING``), from any
 language binding, and from readStream, with Catalyst seeing an
 ordinary relation it can prune/filter above. Data files ride
 ``pyarrow.fs`` (local paths and any ``scheme://`` pyarrow can reach).
-Version listing, the pointer and commits go through the
-``sources/versioned.py`` backend seam with a pure-Python backend
-(``_backend``): these run in Python workers with no SparkSession, so
+Reads resolve versions through the ``sources/versioned.py`` seam too:
+``versioned.resolve_snapshot`` (and ``committed_versions`` for the
+feed) gives each version's files, column mapping, deletion vectors and
+stats from one manifest body, under the same "committed" rule as
+``read_table``. Those calls and the commits take a pure-Python backend
+(``_backend``): they run in Python workers with no SparkSession, so
 the Hadoop backend is out of reach.
 
 Reference parity: the reference's sources are fixed-format directory
@@ -112,13 +115,16 @@ from pyspark.sql.types import (
 
 from .versioned import (
     LocalFsBackend,
+    Snapshot,
     _commit_files,
     _finish_replayed_commit,
     _heartbeat_staging,
     _lease_staging,
     _ledger_entries,
-    latest_version,
-    versions,
+    _load_snapshot,
+    _stats_skip,
+    committed_versions,
+    resolve_snapshot,
 )
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -222,21 +228,6 @@ class _ArrowFsBackend:
         self._fs.move(self._p(src), self._p(dst))
 
 
-def _resolve_version(table_dir: str, version: int | None) -> int:
-    """An explicit version, else the pointer, else the newest retained
-    version."""
-    if version is not None:
-        return version
-    backend = _backend(table_dir)
-    v = latest_version(table_dir, backend)
-    if v is None:
-        vs = versions(table_dir, backend)
-        if not vs:
-            raise FileNotFoundError(f"no versions under {table_dir}")
-        v = vs[-1]
-    return v
-
-
 def _uri_prefix(original_path: str) -> str:
     """pyarrow FileInfo.path drops the URI scheme AND authority
     (s3://bucket/k -> bucket/k, hdfs://nn:8020/t -> /t); capture
@@ -253,149 +244,6 @@ def _uri_prefix(original_path: str) -> str:
         return trimmed[: len(trimmed) - len(internal.rstrip("/"))]
     # unexpected shape: fall back to scheme-only (correct for s3/file)
     return original_path.split("://", 1)[0] + "://"
-
-
-def _snapshot_files(
-    fs: "pafs.FileSystem", snap_dir: str, uri_prefix: str = ""
-) -> list[str]:
-    import pyarrow.fs as pafs
-
-    infos = fs.get_file_info(pafs.FileSelector(snap_dir, recursive=False))
-    return sorted(
-        uri_prefix + i.path
-        for i in infos
-        if i.type == pafs.FileType.File and i.base_name.endswith(".parquet")
-    )
-
-
-def _manifest_stats(fs: "pafs.FileSystem", table_dir: str, v: int) -> dict:
-    """Per-file min/max stats from a manifest commit ({} when the
-    version is copy-published or the manifest carries none)."""
-    import json
-
-    try:
-        with fs.open_input_stream(f"{table_dir}/_manifest_v{v:05d}.json") as f:
-            return json.loads(f.read().decode()).get("stats", {}) or {}
-    except (FileNotFoundError, OSError, ValueError):
-        return {}
-
-
-def _manifest_columns(fs: "pafs.FileSystem", table_dir: str, v: int) -> list | None:
-    """COLUMN MAPPING of a manifest version (None = identity): entries
-    {"id", "name" (logical), "physical"} — see versioned._manifest_columns.
-    Physical file columns never change; each version's manifest maps its
-    own logical names over them, so renamed/dropped columns read
-    correctly for every retained version."""
-    import json
-
-    try:
-        with fs.open_input_stream(f"{table_dir}/_manifest_v{v:05d}.json") as f:
-            return json.loads(f.read().decode()).get("columns")
-    except (FileNotFoundError, OSError, ValueError):
-        return None
-
-
-def _stat_comparable(val):
-    """Normalize a pushed literal to the manifest-stats domain: DATE
-    literals become ISO 'YYYY-MM-DD' strings (how the stats collector
-    records date min/max; lexicographic == chronological), everything
-    else passes through."""
-    import datetime
-
-    if isinstance(val, datetime.date) and not isinstance(val, datetime.datetime):
-        return val.isoformat()
-    return val
-
-
-def _manifest_dv(fs: "pafs.FileSystem", table_dir: str, v: int) -> dict:
-    """Deletion-vector map of a manifest version ({} = none): data-file
-    rel -> dv parquet rel of (file, pos) DELETED row positions. See
-    versioned._manifest_dv."""
-    import json
-
-    try:
-        with fs.open_input_stream(f"{table_dir}/_manifest_v{v:05d}.json") as f:
-            return json.loads(f.read().decode()).get("dv") or {}
-    except (FileNotFoundError, OSError, ValueError):
-        return {}
-
-
-def _file_may_match(stats: dict | None, pushed: list[tuple]) -> bool:
-    """File-level skipping decision: False ONLY when the pushed
-    conjuncts prove no row of the file can match. Entries are
-    ``[min, max]`` (legacy manifests) or ``[min, max, nulls, rows]``;
-    min/max are sound over NON-NULL values, and the supported
-    comparison ops never match nulls, so range-pruning ignores null
-    rows safely; ``notnull`` prunes only on an explicit all-null count.
-    A min/max of None (all-null column) can never satisfy a comparison,
-    so comparison conjuncts prune those files too. Missing stats,
-    unknown ops, or cross-type comparisons keep the file — skipping is
-    an optimization, never a correctness dependency."""
-    if not stats:
-        return True
-    for op, col, val in pushed:
-        rng = stats.get(col)
-        if rng is None:
-            continue
-        lo, hi = rng[0], rng[1]
-        all_null = len(rng) >= 4 and rng[2] == rng[3] and rng[3] > 0
-        if op == "notnull":
-            if all_null:
-                return False  # provably all-null: NOT NULL matches nothing
-            continue
-        if lo is None:
-            # min/max absent: either a provably all-null column (no
-            # comparison can match a null) or merely UNUSABLE statistics
-            # (decimal/binary min-max) — only the former may prune
-            if all_null:
-                return False
-            continue
-        val = _stat_comparable(val)
-        try:
-            if op == "eq" and (val < lo or val > hi):
-                return False
-            if op == "ge" and hi < val:
-                return False
-            if op == "gt" and hi <= val:
-                return False
-            if op == "le" and lo > val:
-                return False
-            if op == "lt" and lo >= val:
-                return False
-            if op == "in" and all(
-                x < lo or x > hi for x in map(_stat_comparable, val)
-            ):
-                return False
-        except TypeError:
-            continue  # cross-type comparison: keep the file
-    return True
-
-
-def _version_files(
-    fs: "pafs.FileSystem", table_dir: str, v: int, uri_prefix: str = ""
-) -> list[str]:
-    """Data files of version ``v`` in either publication form: the
-    copy-published v-dir, or the manifest's file list (paths relative
-    to the table root). Raises FileNotFoundError when neither form is
-    retained — same contract the v-dir-only path had."""
-    import json
-
-    import pyarrow.fs as pafs
-
-    snap = f"{table_dir}/v{v:05d}"
-    if fs.get_file_info(snap).type == pafs.FileType.Directory:
-        return _snapshot_files(fs, snap, uri_prefix)
-    mkey = f"{table_dir}/_manifest_v{v:05d}.json"
-    try:
-        with fs.open_input_stream(mkey) as f:
-            body = json.loads(f.read().decode())
-    except (FileNotFoundError, OSError) as e:
-        raise FileNotFoundError(f"version {v} not retained in {table_dir}") from e
-    return sorted(
-        f"{uri_prefix}{table_dir}/{rel}"
-        for rel in body["files"]
-        if rel.endswith(".parquet")
-    )
 
 
 _ARROW_TO_SPARK = [
@@ -523,13 +371,13 @@ def _ddl_to_arrow(ddl: str):
 
 
 def _snapshot_schema(table_dir: str, version: int | None) -> StructType:
+    snap = resolve_snapshot(table_dir, version, _backend(table_dir))
+    if not snap.rels:
+        raise FileNotFoundError(f"empty snapshot v{snap.version} in {table_dir}")
     fs, p = _fs_and_path(table_dir)
-    v = _resolve_version(table_dir, version)
-    files = _version_files(fs, p, v)
-    if not files:
-        raise FileNotFoundError(f"empty snapshot v{v} in {table_dir}")
-    physical = _arrow_schema_to_spark(_parquet_dataset(fs, files[0]).schema)
-    mapping = _manifest_columns(fs, p, v)
+    first = f"{p.rstrip('/')}/{snap.rels[0]}"
+    physical = _arrow_schema_to_spark(_parquet_dataset(fs, first).schema)
+    mapping = (snap.body or {}).get("columns")
     if not mapping:
         return physical
     by_phys = {f.name: f for f in physical.fields}
@@ -837,19 +685,15 @@ class VersionedReader(DataSourceReader):
             not in ("float", "double", "timestamp", "timestamp_ntz")
         }
         self._table_dir = table_dir
-        self._version = version
         self._pushed: list[tuple] = []
-        # column mapping (logical <-> physical), resolved at plan time
-        # for THIS snapshot's manifest: file reads and stats lookups use
+        # resolve the snapshot ONCE: mapping, dv map, files and stats
+        # must all come from the SAME version, or a commit racing the
+        # plan would apply one version's mapping to another's files
+        self._snap = resolve_snapshot(table_dir, version, _backend(table_dir))
+        body = self._snap.body or {}
+        # column mapping (logical <-> physical): file reads use
         # physical names; Spark sees logical ones
-        fs, p = _fs_and_path(table_dir)
-        # resolve the snapshot ONCE: mapping, dv map, and (via
-        # self._resolved_v in partitions()) the file list must all come
-        # from the SAME version, or a commit racing the plan would
-        # apply one version's mapping to another version's files
-        v = _resolve_version(table_dir, version)
-        self._resolved_v = v
-        mapping = _manifest_columns(fs, p, v) or []
+        mapping = body.get("columns") or []
         self._log2phys = {c["name"]: c["physical"] for c in mapping}
         # ADDED columns (metadata-only) may be absent from pre-add
         # files: arrow types resolved here, driver-side, for the
@@ -859,11 +703,17 @@ class VersionedReader(DataSourceReader):
         }
         # deletion vectors, keyed by data-file NAME at plan time; the
         # dv parquet itself is read executor-side per partition
-        prefix = _uri_prefix(table_dir)
+        td = table_dir.rstrip("/")
         self._dv_by_name = {
-            rel.rsplit("/", 1)[-1]: f"{prefix}{p}/{dv_rel}"
-            for rel, dv_rel in _manifest_dv(fs, p, v).items()
+            rel.rsplit("/", 1)[-1]: f"{td}/{dv_rel}"
+            for rel, dv_rel in (body.get("dv") or {}).items()
         }
+
+    def __getstate__(self) -> dict:
+        # Spark pickles the reader into every read task before it plans
+        # partitions: the snapshot (every file's stats) stays on the
+        # planner, tasks get only the maps derived from it above
+        return {k: v for k, v in self.__dict__.items() if k != "_snap"}
 
     def _phys(self, name: str) -> str:
         return self._log2phys.get(name, name)
@@ -877,36 +727,19 @@ class VersionedReader(DataSourceReader):
         return iter(filters)
 
     def partitions(self):
-        fs, p = _fs_and_path(self._table_dir)
-        v = getattr(self, "_resolved_v", None)
-        if v is None:  # instances built without __init__ (tests)
-            v = _resolve_version(self._table_dir, self._version)
-        prefix = _uri_prefix(self._table_dir)
-        files = _version_files(fs, p, v, prefix)
-        if self._pushed:
-            # FILE-level data skipping from manifest min/max stats (the
-            # Delta/Iceberg move): a pushed conjunct whose value range
-            # cannot intersect a file's recorded range drops the whole
-            # file from the scan — planner-side, before any task runs.
-            # Spark still re-applies every filter above, so skipping is
-            # pure I/O savings, never a semantics dependency.
-            stats = _manifest_stats(fs, p, v)
-            if stats:
-                pushed_phys = [
-                    (op, self._phys(col), val) for op, col, val in self._pushed
-                ]  # stats come from parquet footers: physical-keyed
-                files = [
-                    f
-                    for f in files
-                    if _file_may_match(
-                        stats.get(f.rsplit("/", 1)[-1]), pushed_phys
-                    )
-                ]
+        # FILE-level data skipping from manifest min/max stats (the
+        # Delta/Iceberg move), planner-side, before any task runs;
+        # Spark still re-applies every filter above, so skipping is
+        # pure I/O savings, never a semantics dependency
+        rels = _stats_skip(self._snap.body, self._snap.rels, self._pushed)
+        td = self._table_dir.rstrip("/")
+        files = [f"{td}/{rel}" for rel in rels]
         entries = [
             _FileRead(f, dv_path=self._dv_by_name.get(f.rsplit("/", 1)[-1]))
             for f in files
         ]
-        return _pack(entries, _file_sizes(fs, files, prefix))
+        fs, _ = _fs_and_path(self._table_dir)
+        return _pack(entries, _file_sizes(fs, files, _uri_prefix(self._table_dir)))
 
     def read(self, partition: _FileBin):
         phys_cols = [self._phys(c) for c in self._cols]
@@ -1026,7 +859,7 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         # path re-plans the checkpointed batch (partitions) before the
         # first latestOffset, so a limited stream never caps stale.
         self._pos: dict | None = None
-        self._files_cache: dict[int, list[str]] = {}
+        self._snapshots: dict[int, Snapshot] = {}
         self._sizes_cache: dict[int, list[int]] = {}
         # column mapping: the stream's declared schema is the LATEST
         # head's logical one, but each replayed version reads under a
@@ -1038,10 +871,8 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         # fallback for versions WITHOUT their own mapping: pre-mapping
         # files carry the latest mapping's physical names; mapping-
         # reset rewrites carry the logical names — both resolve here.
-        fs, p = _fs_and_path(table_dir)
-        vs = versions(table_dir, _backend(table_dir))
-        mapping = (_manifest_columns(fs, p, vs[-1]) if vs else None) or []
-        self._latest_mapping = mapping
+        vs = committed_versions(table_dir, _backend(table_dir))
+        mapping = (self._columns(vs[-1]) if vs else None) or []
         self._read_cols = [
             {c["name"]: c["physical"] for c in mapping}.get(n, n) for n in self._cols
         ] if mapping else self._cols
@@ -1062,7 +893,7 @@ class VersionFeedStreamReader(DataSourceStreamReader):
             except Exception:
                 pass
 
-    def _eras(self, fs, p):
+    def _eras(self):
         """Contiguous runs of mapped versions ("mapping eras"), newest
         first, each as (first_v, last_v, last_mapping). Eras are
         separated by mapping-resetting full rewrites (compaction,
@@ -1071,14 +902,14 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         so ids are only meaningful WITHIN an era. Cached per retained-
         version set (one manifest GET per version when history
         changes)."""
-        vs = tuple(versions(self._table_dir, _backend(self._table_dir)))
+        vs = tuple(committed_versions(self._table_dir, _backend(self._table_dir)))
         cache = getattr(self, "_era_cache", None)
         if cache is not None and cache[0] == vs:
             return cache[1]
         runs = []
         cur = None
         for w in vs:
-            m = _manifest_columns(fs, p, w)
+            m = self._columns(w)
             if m:
                 if cur is None:
                     cur = [w, w, m]
@@ -1093,7 +924,7 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         self._era_cache = (vs, eras)
         return eras
 
-    def _translation(self, fs, p, v: int):
+    def _translation(self, v: int):
         """(read_cols, added_arrow) for replaying version ``v``: which
         column name to request from its files per stream column, and
         arrow null-backfill types for names the files may lack.
@@ -1115,7 +946,7 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         could mis-join field ids across eras."""
         cols = self._cols
         field_arrow = getattr(self, "_field_arrow", {})
-        eras = self._eras(fs, p)
+        eras = self._eras()
         if not eras:
             # no mapping anywhere in retained history: physical ==
             # logical for every version
@@ -1147,7 +978,7 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         read_cols, added = [], {}
         if era_of_v is not None:
             _, _, mlast = era_of_v
-            mv = _manifest_columns(fs, p, v) or mlast
+            mv = self._columns(v) or mlast
             by_id = {c["id"]: c for c in mv}
             last_by_name = {c["name"]: c for c in mlast}
             for i, n in enumerate(requested):
@@ -1204,15 +1035,27 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         if pos is None or _feed_key(offset) > _feed_key(pos):
             self._pos = dict(offset)
 
-    def _feed_files(self, fs, p, v: int, prefix: str) -> list[str]:
-        cache = getattr(self, "_files_cache", None)
+    def _snapshot(self, v: int) -> Snapshot:
+        """Version ``v``'s snapshot, one manifest parse per version
+        (bounded: streams tail for months). Every version asked for is
+        at or below a committed head this reader resolved."""
+        cache = getattr(self, "_snapshots", None)
         if cache is None:
-            cache = self._files_cache = {}
+            cache = self._snapshots = {}
         if v not in cache:
-            while len(cache) >= 64:  # bounded: streams tail for months
+            while len(cache) >= 64:
                 cache.pop(next(iter(cache)))
-            cache[v] = _version_files(fs, p, v, prefix)
+            cache[v] = _load_snapshot(
+                self._table_dir.rstrip("/"), v, _backend(self._table_dir)
+            )
         return cache[v]
+
+    def _columns(self, v: int) -> list | None:
+        return (self._snapshot(v).body or {}).get("columns")
+
+    def _feed_files(self, v: int) -> list[str]:
+        td = self._table_dir.rstrip("/")
+        return [f"{td}/{rel}" for rel in self._snapshot(v).rels]
 
     def _feed_sizes(self, fs, v: int, files: list[str], prefix: str) -> list[int]:
         """Per-file byte sizes (for maxBytesPerTrigger and bin
@@ -1233,7 +1076,7 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         return off
 
     def _initial_offset(self) -> dict:
-        vs = versions(self._table_dir, _backend(self._table_dir))
+        vs = committed_versions(self._table_dir, _backend(self._table_dir))
         # getattr: tolerate instances built without __init__ (tests,
         # legacy pickles) — absent attribute means no startingVersion
         sv = getattr(self, "_starting_version", None)
@@ -1272,11 +1115,8 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         return {"version": (vs[0] - 1) if vs else 0}
 
     def latestOffset(self) -> dict:  # noqa: N802
-        backend = _backend(self._table_dir)
-        v = latest_version(self._table_dir, backend)
-        if v is None:
-            vs = versions(self._table_dir, backend)
-            v = vs[-1] if vs else 0
+        vs = committed_versions(self._table_dir, _backend(self._table_dir))
+        v = vs[-1] if vs else 0
         max_files = getattr(self, "_max_files", None)
         max_bytes = getattr(self, "_max_bytes", None)
         if max_files is None and max_bytes is None:
@@ -1291,7 +1131,7 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         if base is None:
             base = self._initial_offset()
         bv, bi = _feed_parse(base)
-        fs, p = _fs_and_path(self._table_dir)
+        fs, _ = _fs_and_path(self._table_dir)
         prefix = _uri_prefix(self._table_dir)
         taken_files = 0
         taken_bytes = 0
@@ -1307,14 +1147,13 @@ class VersionFeedStreamReader(DataSourceStreamReader):
                 return False
             return True
 
-        vs = versions(self._table_dir, backend)
         pos_v, pos_i = bv, bi
         for w in vs:
             if w < bv or (w == bv and bi is None):
                 continue
             if w > v:
                 break
-            files = self._feed_files(fs, p, w, prefix)
+            files = self._feed_files(w)
             sizes = (
                 self._feed_sizes(fs, w, files, prefix)
                 if max_bytes is not None
@@ -1343,7 +1182,8 @@ class VersionFeedStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         self._dbg(f"partitions(start={start}, end={end})")
-        fs, p = _fs_and_path(self._table_dir)
+        fs, _ = _fs_and_path(self._table_dir)
+        td = self._table_dir.rstrip("/")
         prefix = _uri_prefix(self._table_dir)
         sv, si = _feed_parse(start)
         ev, ei = _feed_parse(end)
@@ -1351,16 +1191,17 @@ class VersionFeedStreamReader(DataSourceStreamReader):
         sizes: list[int] = []
         from_v = sv if si is not None else sv + 1
         for v in range(from_v, ev + 1):
-            files = self._feed_files(fs, p, v, prefix)
+            files = self._feed_files(v)
             lo = si if (v == sv and si is not None) else 0
             hi = ei if (v == ev and ei is not None) else len(files)
             if lo >= hi:
                 continue
+            body = self._snapshot(v).body or {}
             dv_by_name = {
-                rel.rsplit("/", 1)[-1]: f"{prefix}{p}/{dv_rel}"
-                for rel, dv_rel in _manifest_dv(fs, p, v).items()
+                rel.rsplit("/", 1)[-1]: f"{td}/{dv_rel}"
+                for rel, dv_rel in (body.get("dv") or {}).items()
             }
-            read_cols_v, added_v = self._translation(fs, p, v)
+            read_cols_v, added_v = self._translation(v)
             entries.extend(
                 _FileRead(
                     f, v, dv_path=dv_by_name.get(f.rsplit("/", 1)[-1]),
@@ -1661,10 +1502,25 @@ def register_python_sources(spark) -> None:
     overwrites with an identical implementation, which is harmless).
     Python-source filter pushdown is opt-in (and pushFilters on a
     source that implements it FAILS analysis when the flag is off), so
-    enable it here — runtime-settable SQL conf."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(VersionedDataSource)
-    spark.dataSource.register(VersionFeedDataSource)
+    enable it here — runtime-settable SQL conf.
+
+    Spark checks a new name against the ACTIVE session's sources, so
+    registering on a child (``session.scoped_session``) of a session
+    that already registered them fails with DATA_SOURCE_ALREADY_EXISTS
+    unless the child is the active session meanwhile."""
+    from pyspark.sql import SparkSession
+
     from .delta_feed import DeltaFeedDataSource
 
-    spark.dataSource.register(DeltaFeedDataSource)
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    jcls = SparkSession._get_j_spark_session_class(spark._jvm)
+    prev = jcls.getActiveSession()
+    jcls.setActiveSession(spark._jsparkSession)
+    try:
+        for source in (VersionedDataSource, VersionFeedDataSource, DeltaFeedDataSource):
+            spark.dataSource.register(source)
+    finally:
+        if prev.isDefined():
+            jcls.setActiveSession(prev.get())
+        else:
+            jcls.clearActiveSession()

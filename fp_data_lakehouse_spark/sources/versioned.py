@@ -68,6 +68,7 @@ import tempfile
 import threading
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -112,9 +113,9 @@ _LEASE_TTL_SEC = 60.0
 # MEASURED size, which cannot OOM the way a blind hint can.
 _DV_BROADCAST_MAX_ROWS = 1_000_000
 
-# skip_filters ops read_table accepts — mirrors pyds._file_may_match's
-# pushdown vocabulary (shape-validated up front so a typo'd op fails
-# loudly instead of silently disabling pruning)
+# skip_filters ops read_table accepts — _file_may_match's vocabulary
+# (shape-validated up front so a typo'd op fails loudly instead of
+# silently disabling pruning)
 _SKIP_OPS = frozenset({"eq", "lt", "le", "gt", "ge", "in", "notnull"})
 
 
@@ -835,42 +836,10 @@ def _manifest_files(table_dir: str, v: int, backend) -> list[str]:
     return _manifest_body(table_dir, v, backend)["files"]
 
 
-def _manifest_dv(table_dir: str, v: int, backend) -> dict:
-    """DELETION-VECTOR map of a manifest version ({} = none): data-file
-    rel -> dv-file rel. A dv file is a parquet of (file STRING, pos
-    BIGINT) rows naming DELETED row positions (parquet row_index) per
-    data-file NAME — the merge-on-read row-level delete (Delta/Iceberg
-    deletion vectors / position deletes): a DELETE touches no data
-    file, it publishes one dv object + one manifest. Readers apply the
-    dv as a positional anti-join; compaction (or any full rewrite)
-    applies dvs physically and clears the map."""
-    try:
-        return _manifest_body(table_dir, v, backend).get("dv") or {}
-    except FileNotFoundError:
-        return {}
-
-
 def _manifest_all_rels(body: dict) -> list[str]:
     """Every table-relative object a manifest references: data files
     plus deletion-vector files — the reference set GC must respect."""
     return list(body.get("files", [])) + sorted(set((body.get("dv") or {}).values()))
-
-
-def _manifest_columns(table_dir: str, v: int, backend) -> list[dict] | None:
-    """COLUMN MAPPING of a manifest version (None = identity, i.e. the
-    parquet files' physical names ARE the logical schema). Each entry is
-    ``{"id": stable_field_id, "name": logical, "physical": physical}``
-    — the Delta/Iceberg column-mapping move: RENAME and DROP are
-    metadata-only commits that re-map logical names over unchanged
-    data files, so a renamed table never rewrites a byte and files
-    carried by reference across the rename read correctly under the
-    new schema. Physical names never change once written; field ids
-    survive every mapping commit, so a column's identity is stable
-    across any number of renames."""
-    try:
-        return _manifest_body(table_dir, v, backend).get("columns")
-    except FileNotFoundError:
-        return None
 
 
 def _to_logical(df: DataFrame, columns: list[dict] | None) -> DataFrame:
@@ -971,7 +940,7 @@ def _read_physical(spark: SparkSession, td: str, rels: list[str], body: dict) ->
     return df
 
 
-# the public schema of a deletion-vector parquet (see _manifest_dv)
+# the public schema of a deletion-vector parquet (see Snapshot)
 _DV_SCHEMA = "file STRING, pos BIGINT"
 
 
@@ -990,8 +959,10 @@ def _to_physical(df: DataFrame, columns: list[dict] | None) -> DataFrame:
 
 
 def versions(table_dir: str, backend=None) -> list[int]:
-    """Retained (queryable) snapshot versions, ascending — v-dir
-    (copy-published) and manifest-published versions together."""
+    """Retained snapshot versions, ascending — v-dir (copy-published)
+    and manifest-published versions together, including a crashed
+    writer's uncommitted orphan above the pointer. The queryable ones
+    are :func:`committed_versions`."""
     backend = backend or _backend_for(table_dir)
     return sorted(
         set(_version_dirs(table_dir, backend))
@@ -1027,6 +998,109 @@ def _ledger_versions(table_dir: str, backend) -> set[int]:
     the LEDGER is the commit point, so they are committed even when the
     pointer swap was lost to a crash."""
     return set(_ledger_entries(table_dir, backend).values())
+
+
+class Snapshot(NamedTuple):
+    """One committed version as every reader sees it
+    (:func:`resolve_snapshot`).
+
+    ``body`` is the parsed ``_manifest_v{N}.json`` of a log-published
+    version, or None for a copy-published v-dir. A manifest records:
+
+    - ``files``: table-relative data-file paths (under ``_data/``);
+    - ``stats``: per data-file NAME, ``{column: [min, max(, nulls,
+      rows)]}`` over physical columns (:func:`_file_may_match`);
+    - ``columns``: the COLUMN MAPPING (absent = identity, i.e. the
+      files' physical names ARE the logical schema). Each entry is
+      ``{"id": stable_field_id, "name": logical, "physical":
+      physical}``, plus the declared ``type`` on an added column — the
+      Delta/Iceberg column-mapping move: RENAME and DROP are
+      metadata-only commits that re-map logical names over unchanged
+      data files. Physical names never change once written; field ids
+      survive every mapping commit;
+    - ``dv``: the DELETION-VECTOR map, data-file rel -> dv-file rel. A
+      dv file is a parquet of (file STRING, pos BIGINT) rows naming
+      DELETED row positions (parquet row_index) per data-file NAME —
+      the merge-on-read row-level delete (Delta/Iceberg deletion
+      vectors / position deletes). Readers apply it as a positional
+      anti-join; compaction (or any full rewrite) applies dvs
+      physically and clears the map;
+    - ``schema`` (the files' physical Spark schema), ``ts`` (commit
+      time), ``dv_rows`` and ``clustered``.
+
+    ``rels`` are the version's parquet data files, relative to the
+    table dir and sorted: a rate-limited feed offset indexes into them."""
+
+    version: int
+    body: dict | None
+    rels: list[str]
+
+
+def _committed(table_dir: str, backend):
+    """The one rule for "committed", the rule ``_claim_slot`` enforces:
+    version ``v`` is committed when it is at or below the pointer, or
+    when the ``_COMMITS`` ledger records it (the streaming sink's commit
+    point, whose pointer swap a crash may have lost). Anything else
+    above the pointer is a crashed writer's orphan that the next claim
+    deletes, so it is never readable. Returns (head, is_committed):
+    the newest committed version (0 when none) and the rule."""
+    ptr = latest_version(table_dir, backend) or 0
+    ledgered = _ledger_versions(table_dir, backend)
+    return max(ledgered | {ptr}), lambda v: v <= ptr or v in ledgered
+
+
+def _load_snapshot(td: str, v: int, backend) -> Snapshot:
+    """Version ``v``'s manifest (one GET) or, failing that, its v-dir
+    (one LIST), with no commit check: callers resolve ``v`` first."""
+    import json
+
+    txt = backend.read_text(f"{td}/_manifest_v{v:05d}.json")
+    if txt is not None:
+        body = json.loads(txt)
+        return Snapshot(v, body, sorted(r for r in body["files"] if r.endswith(".parquet")))
+    names = backend.list_names(f"{td}/v{v:05d}")
+    if not names:
+        raise FileNotFoundError(f"version {v} not retained in {td}")
+    return Snapshot(v, None, sorted(f"v{v:05d}/{n}" for n in names if n.endswith(".parquet")))
+
+
+def resolve_snapshot(table_dir: str, version: int | None = None, backend=None) -> Snapshot:
+    """The snapshot of ``version`` (default: the newest committed one).
+    Every reader resolves here — ``read_table``, ``change_feed``, the
+    exports and both Python DataSources — so they all see one table.
+    Reads the pointer and the ledger once each, then one manifest GET
+    (or one v-dir LIST). Raises FileNotFoundError for an uncommitted,
+    vacuumed or never-written version."""
+    backend = backend or _backend_for(table_dir)
+    td = table_dir.rstrip("/")
+    head, is_committed = _committed(td, backend)
+    if version is None:
+        if not head:
+            raise FileNotFoundError(f"no versions committed in {td}")
+        version = head
+    elif not is_committed(version):
+        raise FileNotFoundError(f"version {version} not committed in {td}")
+    return _load_snapshot(td, version, backend)
+
+
+def committed_versions(table_dir: str, backend=None) -> list[int]:
+    """Retained versions that are committed (:func:`_committed`),
+    ascending: the queryable subset of :func:`versions`."""
+    backend = backend or _backend_for(table_dir)
+    _, is_committed = _committed(table_dir, backend)
+    return [v for v in versions(table_dir, backend) if is_committed(v)]
+
+
+def _manifest_head(table_dir: str, backend, op: str) -> Snapshot:
+    """The committed head for ``op``, which rewrites the head's
+    manifest and so requires one."""
+    head = resolve_snapshot(table_dir, None, backend)
+    if head.body is None:
+        raise ValueError(
+            f"{op} requires a manifest-published head (a copy-published "
+            "v-dir is rewritten whole: write_version, delete_from_version)"
+        )
+    return head
 
 
 def _swap_pointer(backend, td: str, v: int, expected_prev: int) -> None:
@@ -1631,6 +1705,84 @@ def write_version(
     )
 
 
+def _stat_comparable(val):
+    """Normalize a pushed literal to the manifest-stats domain: DATE
+    literals become ISO 'YYYY-MM-DD' strings (how the stats collector
+    records date min/max; lexicographic == chronological), everything
+    else passes through."""
+    import datetime
+
+    if isinstance(val, datetime.date) and not isinstance(val, datetime.datetime):
+        return val.isoformat()
+    return val
+
+
+def _file_may_match(stats: dict | None, pushed: list[tuple]) -> bool:
+    """File-level skipping decision: False ONLY when the pushed
+    conjuncts prove no row of the file can match. Entries are
+    ``[min, max]`` (legacy manifests) or ``[min, max, nulls, rows]``;
+    min/max are sound over NON-NULL values, and the supported
+    comparison ops never match nulls, so range-pruning ignores null
+    rows safely; ``notnull`` prunes only on an explicit all-null count.
+    A min/max of None (all-null column) can never satisfy a comparison,
+    so comparison conjuncts prune those files too. Missing stats,
+    unknown ops, or cross-type comparisons keep the file — skipping is
+    an optimization, never a correctness dependency."""
+    if not stats:
+        return True
+    for op, col, val in pushed:
+        rng = stats.get(col)
+        if rng is None:
+            continue
+        lo, hi = rng[0], rng[1]
+        all_null = len(rng) >= 4 and rng[2] == rng[3] and rng[3] > 0
+        if op == "notnull":
+            if all_null:
+                return False  # provably all-null: NOT NULL matches nothing
+            continue
+        if lo is None:
+            # min/max absent: either a provably all-null column (no
+            # comparison can match a null) or merely UNUSABLE statistics
+            # (decimal/binary min-max) — only the former may prune
+            if all_null:
+                return False
+            continue
+        val = _stat_comparable(val)
+        try:
+            if op == "eq" and (val < lo or val > hi):
+                return False
+            if op == "ge" and hi < val:
+                return False
+            if op == "gt" and hi <= val:
+                return False
+            if op == "le" and lo > val:
+                return False
+            if op == "lt" and lo >= val:
+                return False
+            if op == "in" and all(
+                x < lo or x > hi for x in map(_stat_comparable, val)
+            ):
+                return False
+        except TypeError:
+            continue  # cross-type comparison: keep the file
+    return True
+
+
+def _stats_skip(body: dict | None, rels: list[str], pushed: list[tuple]) -> list[str]:
+    """The files of ``rels`` that manifest ``body``'s per-file stats
+    cannot rule out under the pushed ``(op, column, value)`` conjuncts,
+    with LOGICAL column names translated through the body's column
+    mapping (stats come from parquet footers: physical-keyed). A
+    copy-published version (no body) or a manifest without stats keeps
+    every file."""
+    stats = (body or {}).get("stats")
+    if not pushed or not stats:
+        return rels
+    phys = {c["name"]: c["physical"] for c in body.get("columns") or []}
+    pushed = [(op, phys.get(col, col), val) for op, col, val in pushed]
+    return [r for r in rels if _file_may_match(stats.get(r.rsplit("/", 1)[-1]), pushed)]
+
+
 def read_table(
     spark: SparkSession,
     table_dir: str,
@@ -1677,42 +1829,27 @@ def read_table(
         if version is not None:
             raise ValueError("pass either version or as_of, not both")
         version = version_as_of_timestamp(table_dir, as_of, backend)
-    if version is None:
-        version = latest_version(table_dir, backend)
-        if version is None:
-            raise FileNotFoundError(f"no committed version in {table_dir}")
-    in_dirs = version in _version_dirs(table_dir, backend)
-    in_manifests = not in_dirs and version in _manifest_versions(table_dir, backend)
-    if not in_dirs and not in_manifests:
-        raise FileNotFoundError(f"version {version} not retained in {table_dir}")
-    committed = latest_version(table_dir, backend) or 0
-    if version > committed:
-        raise FileNotFoundError(f"version {version} not committed yet in {table_dir}")
-    if in_dirs:
-        return spark.read.parquet(f"{td}/v{version:05d}")
-    body = _manifest_body(table_dir, version, backend)
-    files = body["files"]
-    if not files:
-        raise FileNotFoundError(f"manifest v{version} names no files in {table_dir}")
-    if skip_filters:
-        from .pyds import _file_may_match  # same skipping rules as pyds
+    snap = resolve_snapshot(table_dir, version, backend)
+    pushed = [(op, col, val) for col, op, val in skip_filters or ()]
+    return _read_snapshot(spark, td, snap, pushed)
 
-        mapping = body.get("columns") or []
-        phys = {c["name"]: c["physical"] for c in mapping}
-        pushed = [(op, phys.get(col, col), val) for col, op, val in skip_filters]
-        stats_map = body.get("stats") or {}
-        kept = [
-            rel
-            for rel in files
-            if _file_may_match(stats_map.get(rel.rsplit("/", 1)[-1]), pushed)
-        ]
-        if not kept:
-            # nothing can match: an EMPTY frame with the snapshot's
-            # logical schema (one sample file gives the schema; the
-            # false filter prunes the scan itself)
-            sample = _read_physical(spark, td, files[:1], body)
-            return _to_logical(sample, body.get("columns")).filter(F.lit(False))
-        files = kept
+
+def _read_snapshot(spark: SparkSession, td: str, snap: Snapshot, pushed=()) -> DataFrame:
+    """Scan a resolved snapshot: its logical rows, deletion vectors
+    applied, with the files ``_stats_skip`` rules out under the logical
+    ``(op, column, value)`` conjuncts ``pushed`` left unscanned."""
+    if snap.body is None:
+        return spark.read.parquet(f"{td}/v{snap.version:05d}")
+    body = snap.body
+    if not body["files"]:
+        raise FileNotFoundError(f"manifest v{snap.version} names no files in {td}")
+    files = _stats_skip(body, body["files"], pushed)
+    if not files:
+        # nothing can match: an EMPTY frame with the snapshot's
+        # logical schema (one sample file gives the schema; the
+        # false filter prunes the scan itself)
+        sample = _read_physical(spark, td, body["files"][:1], body)
+        return _to_logical(sample, body.get("columns")).filter(F.lit(False))
     raw = _read_physical(spark, td, files, body)
     # only the SCANNED files' dv objects matter: skip-filter pruning
     # must not read (or anti-join) dvs that mask pruned-away files
@@ -1917,16 +2054,7 @@ def delete_where_cow(
     version's expiry)."""
     backend = backend or _backend_for(table_dir, spark)
     td = table_dir.rstrip("/")
-    base = latest_version(table_dir, backend)
-    if base is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    if base not in _manifest_versions(table_dir, backend):
-        raise ValueError(
-            "delete_where_cow requires a manifest-published head (copy-"
-            "published v-dirs are rewritten whole by delete_from_version)"
-        )
-    head_body = _manifest_body(table_dir, base, backend)
-    rels = head_body["files"]
+    base, head_body, rels = _manifest_head(table_dir, backend, "delete_where_cow")
     mapping = head_body.get("columns")
 
     # ``condition`` is LOGICAL and evaluated over LIVE rows only (dv
@@ -1972,15 +2100,9 @@ def merge_into_version_cow(
     dup = updates.groupBy(*keys).count().filter("count > 1").limit(1).count()
     if dup:
         raise ValueError(f"updates are not unique on merge keys {keys}")
-    base = latest_version(table_dir, backend)
-    if base is None:
+    if latest_version(table_dir, backend) is None:
         return write_version(updates, table_dir, backend, manifest=True)
-    if base not in _manifest_versions(table_dir, backend):
-        raise ValueError(
-            "merge_into_version_cow requires a manifest-published head"
-        )
-    head_body = _manifest_body(table_dir, base, backend)
-    rels = head_body["files"]
+    base, head_body, rels = _manifest_head(table_dir, backend, "merge_into_version_cow")
     mapping = head_body.get("columns")
     if mapping:
         logical = {c["name"] for c in mapping}
@@ -2065,14 +2187,9 @@ def export_symlink_manifest(
     neither. Returns the manifest path."""
     backend = backend or _backend_for(table_dir)
     td = table_dir.rstrip("/")
-    v = version if version is not None else latest_version(table_dir, backend)
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    committed = latest_version(table_dir, backend) or 0
-    if v > committed or v not in set(versions(table_dir, backend)):
-        raise FileNotFoundError(f"version {v} not retained in {table_dir}")
-    if v in _manifest_versions(table_dir, backend):
-        body = _manifest_body(table_dir, v, backend)
+    snap = resolve_snapshot(table_dir, version, backend)
+    v, body, rels = snap
+    if body is not None:
         needs_apply = bool(body.get("columns")) or bool(body.get("dv"))
         if needs_apply and apply:
             if spark is None:
@@ -2089,8 +2206,7 @@ def export_symlink_manifest(
             # vacuum's standard read-under-GC caveat).
             run = uuid.uuid4().hex[:12]
             data_dir = f"{out_dir}/data_{run}"
-            df = read_table(spark, table_dir, version=v, backend=backend)
-            df.write.mode("overwrite").parquet(data_dir)
+            _read_snapshot(spark, td, snap).write.mode("overwrite").parquet(data_dir)
             paths = sorted(
                 f"{data_dir}/{n}"
                 for n in backend.list_names(data_dir)
@@ -2118,17 +2234,9 @@ def export_symlink_manifest(
                 "export with apply=True, or compact_version(...) applies "
                 "them physically first"
             )
-        rels = [rel for rel in body["files"] if rel.endswith(".parquet")]
-        paths = [f"{td}/{rel}" for rel in rels]
-    else:
-        vdir = f"{td}/v{v:05d}"
-        paths = sorted(
-            f"{vdir}/{n}"
-            for n in backend.list_names(vdir)
-            if n.endswith(".parquet")
-        )
-    if not paths:
+    if not rels:
         raise FileNotFoundError(f"version {v} names no data files in {table_dir}")
+    paths = [f"{td}/{rel}" for rel in rels]
     out_dir = f"{td}/{_SYMLINK_DIR}/v{v:05d}"
     backend.makedirs(out_dir)
     backend.write_text_atomic(f"{out_dir}/manifest", "\n".join(paths) + "\n")
@@ -2173,16 +2281,7 @@ def delete_where_dv(
     unchanged when nothing matches."""
     backend = backend or _backend_for(table_dir, spark)
     td = table_dir.rstrip("/")
-    base = latest_version(table_dir, backend)
-    if base is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    if base not in _manifest_versions(table_dir, backend):
-        raise ValueError(
-            "delete_where_dv requires a manifest-published head (copy-"
-            "published v-dirs are rewritten whole by delete_from_version)"
-        )
-    body = _manifest_body(table_dir, base, backend)
-    rels = body["files"]
+    base, body, rels = _manifest_head(table_dir, backend, "delete_where_dv")
     mapping = body.get("columns")
     old_dv = body.get("dv") or {}
 
@@ -2266,7 +2365,7 @@ def delete_where_dv(
     dv_rel = f"{_DATA_PREFIX}/{writer_id}/{dv_files[0]}"
     return _commit(
         table_dir, backend, base, writer_id, staging,
-        manifest_files=rels,  # ZERO data movement
+        manifest_files=body["files"],  # ZERO data movement
         stats=stats,
         columns=mapping,
         dv={name_to_rel[f]: dv_rel for f in per_file if f in name_to_rel},
@@ -2338,11 +2437,11 @@ def version_as_of_timestamp(table_dir: str, ts, backend=None) -> int:
         if ts.tzinfo is None:
             ts = ts.replace(tzinfo=datetime.timezone.utc)
         ts = ts.timestamp()
-    committed = latest_version(table_dir, backend) or 0
+    _, is_committed = _committed(table_dir, backend)
     best = None
     for v in _manifest_versions(table_dir, backend):
-        if v > committed:
-            continue  # published but not yet pointed: not a commit
+        if not is_committed(v):
+            continue
         cts = _manifest_body(table_dir, v, backend).get("ts")
         if cts is not None and cts <= ts and (best is None or v > best):
             best = v
@@ -2384,9 +2483,8 @@ def history(table_dir: str, backend=None) -> list[dict]:
                     "version": v,
                     "ts": None,
                     "form": "copy",
-                    # one v-dir LIST — not data_file_count, whose
-                    # manifest-versions probe would re-LIST the whole
-                    # table dir per version (O(V^2) metadata ops)
+                    # one v-dir LIST — not data_file_count, which
+                    # re-reads the pointer and ledger per version
                     "n_files": sum(
                         1
                         for n in backend.list_names(
@@ -2414,16 +2512,7 @@ def _mapping_commit(spark, table_dir, backend, mutate) -> int:
 
     backend = backend or _backend_for(table_dir, spark)
     td = table_dir.rstrip("/")
-    base = latest_version(table_dir, backend)
-    if base is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    if base not in _manifest_versions(table_dir, backend):
-        raise ValueError(
-            "column mapping requires a manifest-published head (a copy-"
-            "published v-dir rewrites wholesale anyway — rename there "
-            "is a plain withColumnRenamed + write_version)"
-        )
-    body = _manifest_body(table_dir, base, backend)
+    base, body, _ = _manifest_head(table_dir, backend, "column mapping")
     schema = _manifest_schema(body)
     cols = body.get("columns")
     if cols is None:
@@ -2635,10 +2724,10 @@ def change_feed(
     two paths equal."""
     backend = backend or _backend_for(table_dir, spark)
     td = table_dir.rstrip("/")
-    manifests = set(_manifest_versions(table_dir, backend))
-    if not full_scan and from_version in manifests and to_version in manifests:
-        body_o = _manifest_body(table_dir, from_version, backend)
-        body_n = _manifest_body(table_dir, to_version, backend)
+    snap_o = resolve_snapshot(table_dir, from_version, backend)
+    snap_n = resolve_snapshot(table_dir, to_version, backend)
+    body_o, body_n = snap_o.body, snap_n.body
+    if not full_scan and body_o is not None and body_n is not None:
         dv_o, dv_n = body_o.get("dv") or {}, body_n.get("dv") or {}
         fo, fn = set(body_o["files"]), set(body_n["files"])
         changed = (fo ^ fn) | {
@@ -2666,8 +2755,8 @@ def change_feed(
         old = _side(body_o, fo)
         new = _side(body_n, fn)
     else:
-        old = read_table(spark, table_dir, from_version, backend=backend)
-        new = read_table(spark, table_dir, to_version, backend=backend)
+        old = _read_snapshot(spark, td, snap_o)
+        new = _read_snapshot(spark, td, snap_n)
     non_keys = [c for c in new.columns if c not in keys]
     if not non_keys:
         raise ValueError("change_feed requires at least one non-key column")
@@ -2908,12 +2997,7 @@ def cluster_version(
     the new version, or the head when nothing is pending."""
     backend = backend or _backend_for(table_dir, spark)
     td = table_dir.rstrip("/")
-    base = latest_version(table_dir, backend)
-    if base is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    if base not in _manifest_versions(table_dir, backend):
-        raise ValueError("cluster_version requires a manifest-published head")
-    body = _manifest_body(table_dir, base, backend)
+    base, body, _ = _manifest_head(table_dir, backend, "cluster_version")
     cmeta = body.get("clustered")
     done = (
         set(cmeta.get("files", ()))
@@ -2936,14 +3020,7 @@ def cluster_version(
 def data_file_count(table_dir: str, version: int, backend=None) -> int:
     """Number of data objects in a snapshot (metadata-sized LIST for a
     copy-published version, one manifest GET for a log-published one)."""
-    backend = backend or _backend_for(table_dir)
-    if version in _manifest_versions(table_dir, backend):
-        return sum(
-            1 for f in _manifest_files(table_dir, version, backend)
-            if f.endswith(".parquet")
-        )
-    vdir = f"{table_dir.rstrip('/')}/v{version:05d}"
-    return sum(1 for n in backend.list_names(vdir) if n.endswith(".parquet"))
+    return len(resolve_snapshot(table_dir, version, backend).rels)
 
 
 def vacuum(table_dir: str, keep_last: int = 2, backend=None) -> list[int]:

@@ -25,6 +25,7 @@ from fp_data_lakehouse_spark.sources.versioned import (
     LocalFsBackend,
     _ledger_entries,
     latest_version,
+    resolve_snapshot,
     versions,
 )
 
@@ -170,9 +171,10 @@ def test_stream_reader_offsets(versioned_table):
     assert sorted({f.version for f in planned}) == [v1, v2]
     # the bins cover every parquet file of both snapshots, once each
     assert all(f.file_path.endswith(".parquet") for f in planned)
-    fs, p = pyds._fs_and_path(d)
     assert sorted((f.version, f.file_path) for f in planned) == sorted(
-        (v, f) for v in (v1, v2) for f in pyds._version_files(fs, p, v)
+        (v, f"{d}/{rel}")
+        for v in (v1, v2)
+        for rel in resolve_snapshot(d, v).rels
     )
 
 
@@ -197,8 +199,7 @@ def test_batch_partitions_are_file_granular(spark, tmp_path):
     )
     d = str(tmp_path / "multi")
     write_version(df.repartition(4), d)
-    fs, p = pyds._fs_and_path(d)
-    files = pyds._snapshot_files(fs, f"{p}/v00001")
+    files = [f"{d}/{rel}" for rel in resolve_snapshot(d, 1).rels]
     assert len(files) == 4
     reader = pyds.VersionedDataSource(
         {"path": d}
@@ -546,7 +547,7 @@ def test_uri_table_commits_through_arrow_backend(tmp_path):
     degradation warns."""
     from fp_data_lakehouse_spark.sources.pyds import (
         VersionedStreamArrowWriter,
-        _resolve_version,
+        _backend,
     )
 
     d = str(tmp_path / "uri")
@@ -557,7 +558,8 @@ def test_uri_table_commits_through_arrow_backend(tmp_path):
     w.commit([w.write(iter([batch]))], 0)  # replay: publishes nothing
     w.commit([w.write(iter([batch]))], 1)
     assert versions(d) == [1, 2] and latest_version(d) == 2
-    assert _resolve_version(f"file://{d}", None) == 2
+    uri = f"file://{d}"
+    assert resolve_snapshot(uri, None, _backend(uri)).version == 2
     assert _ledger_entries(d, LocalFsBackend()) == {
         ("default", 0): 1,
         ("default", 1): 2,
@@ -665,7 +667,7 @@ def test_stream_feed_replays_manifest_versions(spark, tmp_path):
 
 
 def test_file_may_match_pruning_logic():
-    from fp_data_lakehouse_spark.sources.pyds import _file_may_match
+    from fp_data_lakehouse_spark.sources.versioned import _file_may_match
 
     st = {"k": [10, 20], "s": ["b", "d"]}
     assert _file_may_match(st, [("eq", "k", 15)])
@@ -858,7 +860,7 @@ def test_pushdown_state_is_per_load_opt_in(spark, tmp_path):
 
 
 def test_file_may_match_soundness_matrix():
-    from fp_data_lakehouse_spark.sources.pyds import _file_may_match
+    from fp_data_lakehouse_spark.sources.versioned import _file_may_match
 
     import datetime
 
@@ -1497,3 +1499,84 @@ def test_deletion_vector_object_is_read_once_per_bin(spark, tmp_path, monkeypatc
     got = _read_rows(reader, [b])
     assert len(calls) == 1, calls
     assert got == sorted((k, 2 * k) for k in range(3000) if k % 10 != 7)
+
+
+# ---------------------------------------------------------------------------
+# one rule for "committed": every reader resolves the same version set
+# ---------------------------------------------------------------------------
+
+
+def _orphaned_table(spark, d: str) -> None:
+    """v1, v2 manifests under the pointer; v3 a v-dir the ledger
+    records above the pointer (its swap lost to a crash); v4 an
+    unledgered manifest and v5 an unledgered v-dir above it, the
+    orphans a crashed writer leaves for the next claim to delete."""
+    from fp_data_lakehouse_spark.sources.versioned import write_version
+
+    def rows(n: int, tag: int):
+        return spark.range(n).selectExpr("id AS k", f"id * 10 + {tag} AS v")
+
+    write_version(rows(4, 1), d, manifest=True)
+    write_version(rows(5, 2), d, manifest=True)
+    write_version(rows(6, 3), d)
+    write_version(rows(7, 4), d, manifest=True)
+    rows(8, 5).write.parquet(f"{d}/v00005")
+    with open(f"{d}/_LATEST", "w") as f:
+        f.write("2")
+    with open(f"{d}/_COMMITS", "w") as f:
+        f.write("app:0:3")
+
+
+def test_every_reader_resolves_one_committed_set(spark, tmp_path):
+    import uuid
+
+    from fp_data_lakehouse_spark.sources.versioned import (
+        change_feed,
+        committed_versions,
+        read_table,
+    )
+
+    register_python_sources(spark)
+    d = str(tmp_path / "orphans")
+    _orphaned_table(spark, d)
+    assert versions(d) == [1, 2, 3, 4, 5]
+    assert committed_versions(d) == [1, 2, 3]
+
+    def rows(df):
+        return sorted((r.k, r.v) for r in df.collect())
+
+    def ds(version=None):
+        reader = spark.read.format("fp_versioned").option("path", d)
+        if version is not None:
+            reader = reader.option("version", str(version))
+        return reader.load()
+
+    want = {v: rows(read_table(spark, d, version=v)) for v in (1, 2, 3)}
+    assert [len(want[v]) for v in (1, 2, 3)] == [4, 5, 6]
+    for v in (1, 2, 3):
+        assert rows(ds(v)) == want[v]
+    assert rows(read_table(spark, d)) == rows(ds()) == want[3]
+    for v in (4, 5):
+        with pytest.raises(FileNotFoundError, match="not committed"):
+            read_table(spark, d, version=v)
+        with pytest.raises(Exception, match="not committed"):
+            ds(v).collect()
+        with pytest.raises(FileNotFoundError, match="not committed"):
+            change_feed(spark, d, 2, v, ["k"])
+    # both manifest endpoints: the diff path, then the v-dir fallback
+    assert {r._change_type for r in change_feed(spark, d, 1, 2, ["k"]).collect()} == {
+        "insert", "update_postimage"
+    }
+    assert len(change_feed(spark, d, 2, 3, ["k"]).collect()) == 6
+
+    name = f"orphanfeed_{uuid.uuid4().hex[:6]}"
+    q = (
+        spark.readStream.format("fp_versioned_feed").option("path", d).load()
+        .writeStream.format("memory").queryName(name)
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    fed = spark.table(name)
+    assert sorted({r._version for r in fed.select("_version").collect()}) == [1, 2, 3]
+    for v in (1, 2, 3):
+        assert rows(fed.filter(F.col("_version") == v)) == want[v]

@@ -142,3 +142,23 @@ def test_concurrent_scoped_drains_keep_their_widths(spark, tmp_path):
     assert results[3] == ({3}, 1, 4)
     assert seen == {repr(start)}
     assert not parent.streams.active
+
+
+def test_child_registers_python_sources_after_its_parent(spark, tmp_path):
+    """Spark checks a new Python source's name against the ACTIVE
+    session, so a child of a session that registered fp_versioned
+    failed with DATA_SOURCE_ALREADY_EXISTS. The active session is the
+    caller's again afterwards."""
+    from pyspark.sql import SparkSession
+
+    from fp_data_lakehouse_spark.session import scoped_session
+    from fp_data_lakehouse_spark.sources.pyds import register_python_sources
+    from fp_data_lakehouse_spark.sources.versioned import write_version
+
+    register_python_sources(spark)
+    child = scoped_session(spark, {_PARTS: "3"})
+    register_python_sources(child)
+    assert SparkSession.getActiveSession()._jsparkSession.equals(spark._jsparkSession)
+    d = str(tmp_path / "t")
+    write_version(spark.range(5), d)
+    assert child.read.format("fp_versioned").option("path", d).load().count() == 5

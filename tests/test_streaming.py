@@ -452,3 +452,22 @@ def test_redelivery_staging_is_real_for_directory_fixtures(spark, tmp_path):
     # and a missing fixture raises instead of degrading
     with pytest.raises(Exception):
         _redelivered_source_dir(spark, str(tmp_path / "nope"))
+
+
+def test_st18_table_is_four_files_on_a_four_wide_session(spark):
+    """st18 drains one version under maxFilesPerTrigger=1 and expects
+    four runs, so its table must hold four files at any shuffle width.
+    A hash repartition on the aggregation key folds into the
+    aggregation's own shuffle when spark.sql.shuffle.partitions is 4,
+    and AQE then writes one file."""
+    from fp_data_lakehouse_spark.operators.streamquery import (
+        _st18_table,
+        st18_versioned_feed_rate_limited,
+    )
+    from fp_data_lakehouse_spark.session import scoped_session
+    from fp_data_lakehouse_spark.sources.versioned import data_file_count
+
+    child = scoped_session(spark, {"spark.sql.shuffle.partitions": "4"})
+    assert data_file_count(_st18_table(child, SF_ORACLE), 1) == 4
+    row = st18_versioned_feed_rate_limited(child, SF_ORACLE).collect()[0]
+    assert row.runs_with_progress == 4
